@@ -24,9 +24,11 @@ import graft.operators.Dedup
   * stress run exercises the real mechanism, not a test shim.
   *
   * A skew arm measures keep-first dedup under a hot key (10% of all rows
-  * on ONE key): `keepFirst` (single-phase min_by) vs `keepFirstSalted`
-  * (two-phase) vs the window-ranking form — committed evidence for which
-  * plan survives a dirty-data hot key at 100 TB, whichever way it lands.
+  * on ONE key): `keepFirst` (one WindowGroupLimit pass, partial before the
+  * key shuffle) vs `keepFirstSalted` (two passes, salted key first) vs
+  * `rankDuplicates` filtered to the first occurrence — committed evidence
+  * for which plan survives a dirty-data hot key at 100 TB, whichever way it
+  * lands.
   *
   * Timing: min of `runs` executions per arm — the box oscillates between
   * clean and 5-10× slow regimes on minute timescales (see Bench), and for

@@ -93,13 +93,14 @@ final class TestExecutor(testId: String, resultsDir: String,
     // reference's producer-pool size) must not leak into the engine — in
     // the reference the Kafka topic re-partitions between producers and the
     // dedup engine (src/utils/kafka.py topic partitions), and without this
-    // hop the dedup's map-side partial aggregation runs INSIDE the
+    // hop the dedup's map-side partial step runs INSIDE the
     // num_processes-partition generation stage: at 100M records that is two
-    // tasks each building a ~23M-entry min_by hash map (measured: 3 of 32
-    // cores busy, 55 GiB RSS, rps halved vs 20M — the scale cliff).
-    // Partitioning BY THE DEDUP KEY keeps total shuffles at one: the
-    // groupBy((event_id, bucket)) downstream is satisfied by
-    // hashpartitioning(event_id) and adds no second exchange.
+    // tasks each cutting ~23M keys (measured on the earlier min_by
+    // aggregate plan: 3 of 32 cores busy, 55 GiB RSS, rps halved vs
+    // 20M — the scale cliff). Partitioning BY THE DEDUP KEY keeps total
+    // shuffles at one: the keep-first window over (event_id, bucket)
+    // downstream is satisfied by hashpartitioning(event_id) and adds no
+    // second exchange.
     val topic = sent.repartition(spark.sparkContext.defaultParallelism,
       col("event_id"))
 

@@ -11,27 +11,30 @@ import org.apache.spark.sql.functions._
   * src/pipeline_test.py:21-23).
   *
   * Batch forms (this file) + streaming form (graft.streaming.StreamingDedup,
-  * `dropDuplicatesWithinWatermark`). All batch variants are single-shuffle:
-  * one exchange on the key, then a per-partition sort or hash-agg — the plan
-  * a 1000-executor cluster wants (state partitions by key; no driver
-  * involvement; AQE can coalesce/split skewed partitions).
+  * `dropDuplicatesWithinWatermark`). Every batch keep-first is one
+  * `row_number() = 1` over (key ORDER BY ts, tiebreak), which Spark plans as
+  * Sort → WindowGroupLimit(Partial) → Exchange(hash key) → Sort →
+  * WindowGroupLimit(Final): one exchange on the key, a map-side cut to one
+  * row per key per upstream partition before it, codegen'd UnsafeRow sorts
+  * on both sides — the plan a 1000-executor cluster wants (state partitions
+  * by key; no driver involvement; AQE can coalesce/split skewed partitions).
   */
 object Dedup {
 
   /** Keep the first occurrence per key, globally (the window ≫ data horizon
     * case — the reference's actual regime: 8h window vs minutes of data).
-    * Implemented as min_by over a deterministic (ts, tiebreak) struct: a
-    * hash-aggregate with partial (map-side) combine — cheaper than a
-    * row_number window, which cannot partial-aggregate.
+    * The first occurrence is the least (ts, tiebreak), nulls first; the
+    * window-group-limit plan (see the header) carries plain rows, so
+    * Catalyst prunes columns nobody reads downstream through the dedup.
     */
   def keepFirst(df: DataFrame, key: Seq[String], ts: Column,
-                tiebreak: Column): DataFrame = {
-    val ord = struct(ts, tiebreak)
-    val payload = struct(df.columns.map(col): _*)
-    df.groupBy(key.map(col): _*)
-      .agg(min_by(payload, ord).as("__first"))
-      .select(df.columns.map(c => col(s"__first.$c")): _*)
-  }
+                tiebreak: Column): DataFrame =
+    df.withColumn("__rn", row_number().over(byKeyInOrder(key, ts, tiebreak)))
+      .where(col("__rn") === 1)
+      .drop("__rn")
+
+  private def byKeyInOrder(key: Seq[String], ts: Column, tiebreak: Column) =
+    Window.partitionBy(key.map(col): _*).orderBy(ts, tiebreak)
 
   /** Exact-duplicate elimination on a full row (training-data exact dedup). */
   def exact(df: DataFrame): DataFrame = df.dropDuplicates()
@@ -49,46 +52,34 @@ object Dedup {
     keepFirst(withBucket, key :+ "__bucket", ts, tiebreak).drop("__bucket")
   }
 
-  /** Keep-first via window-function ranking; used where the full ordered
-    * ranking is also wanted (returns rank column when keepAll). Single
-    * shuffle + sort per key.
+  /** The full ranking: every row with its `occurrence` number per key in
+    * (ts, tiebreak) order — for when the ranking itself is the output.
+    * Filtering it to `occurrence = 1` plans exactly like [[keepFirst]];
+    * unfiltered, it sorts every row of a key in one task.
     */
   def rankDuplicates(df: DataFrame, key: Seq[String], ts: Column,
-                     tiebreak: Column): DataFrame = {
-    val w = Window.partitionBy(key.map(col): _*).orderBy(ts, tiebreak)
-    df.withColumn("occurrence", row_number().over(w))
-  }
+                     tiebreak: Column): DataFrame =
+    df.withColumn("occurrence", row_number().over(byKeyInOrder(key, ts, tiebreak)))
 
-  /** Skew-hardened keep-first: two-phase min_by. Phase 1 aggregates per
-    * (key, salt) where salt = hash(tiebreak) mod `saltBuckets` — a hot key's
-    * rows spread over `saltBuckets` reducers; phase 2 merges the per-salt
-    * winners per key. min_by is associative, so the result is EXACTLY
-    * keepFirst's (property-tested).
+  /** Skew-hardened keep-first: [[keepFirst]] twice. Phase 1 keeps the first
+    * row per (key, salt) where salt = hash(tiebreak) mod `saltBuckets` — a
+    * hot key's rows spread over `saltBuckets` reducers; phase 2 keeps the
+    * first of the per-salt winners per key. The first of the firsts is the
+    * first, so the result is EXACTLY keepFirst's (property-tested).
     *
-    * Measured (stress skew arm, results/stress_latest.json + README):
-    * [[keepFirst]] is itself nearly skew-immune — map-side partial combine
-    * collapses a hot key to one row per upstream partition before the
-    * shuffle, so at a 50%-hot-key 40M-row profile the salted form wins only
-    * ~1.1×. Keep it for the regimes partial combine doesn't cover (very
-    * wide agg buffers pressuring the per-task combine map under a hot key);
-    * the plan that actually dies under skew is window RANKING
-    * ([[rankDuplicates]]: 3.4× degradation at the same profile — one task
-    * sorts the whole hot partition), which is why every keep-first path
-    * here is min_by aggregation.
+    * Measured (stress skew arm, results/stress_skew_2m_wgl.json + README):
+    * [[keepFirst]] needs no salting — its partial WindowGroupLimit already
+    * cuts a hot key to one row per upstream partition before the shuffle,
+    * so the hot reducer receives #partitions rows, not the hot key's share
+    * of the corpus. This form pays a second exchange and two more sorts for
+    * a spread the partial limit already gives: at 2M rows with a 10% hot
+    * key it takes 1.6–1.9× keepFirst's time.
     */
   def keepFirstSalted(df: DataFrame, key: Seq[String], ts: Column,
                       tiebreak: Column, saltBuckets: Int): DataFrame = {
     require(saltBuckets > 1, "saltBuckets must be > 1")
-    val ord = struct(ts, tiebreak)
-    val payload = struct(df.columns.map(col): _*)
-    val salted = df
-      .withColumn("__salt", pmod(hash(tiebreak), lit(saltBuckets)))
-      .withColumn("__ord", ord)
-    val phase1 = salted.groupBy((key.map(col) :+ col("__salt")): _*)
-      .agg(min(col("__ord")).as("__o1"),
-        min_by(payload, col("__ord")).as("__first"))
-    phase1.groupBy(key.map(col): _*)
-      .agg(min_by(col("__first"), col("__o1")).as("__first"))
-      .select(df.columns.map(c => col(s"__first.$c")): _*)
+    val salted = df.withColumn("__salt", pmod(hash(tiebreak), lit(saltBuckets)))
+    keepFirst(keepFirst(salted, key :+ "__salt", ts, tiebreak), key, ts, tiebreak)
+      .drop("__salt")
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{Md5Index, Md5Uuid}
+
 /** S1 — synthetic event generator, Spark-first.
   *
   * The reference expands a JSON template (`$uuid4`, `$name`, `$email`,
@@ -21,17 +23,15 @@ import org.apache.spark.sql.functions._
 object EventGenerator {
 
   /** Deterministic uuid4-shaped id: md5 hex of s"$tag:$seed:" + id, spliced to
-    * 8-4-4-4-12 with the version nibble forced to '4'. Pure column expression.
+    * 8-4-4-4-12 with the version nibble forced to '4'. Pure column expression,
+    * computed by the one-pass [[graft.functions.Md5Uuid]] kernel (the oracle
+    * SQL spells the same value as md5 + substring + concat).
     */
-  def uuidCol(id: Column, seed: Long, tag: String): Column = {
-    val h = md5(concat(lit(s"$tag:$seed:"), id.cast("string")))
-    concat(
-      substring(h, 1, 8), lit("-"),
-      substring(h, 9, 4), lit("-4"),
-      substring(h, 14, 3), lit("-"),
-      substring(h, 17, 4), lit("-"),
-      substring(h, 21, 12))
-  }
+  def uuidCol(id: Column, seed: Long, tag: String): Column =
+    Md5Uuid(md5Input(id, seed, tag))
+
+  private def md5Input(id: Column, seed: Long, tag: String): Column =
+    concat(lit(s"$tag:$seed:"), id.cast("string"))
 
   // Small public-domain-style lookup vocabularies; indexed by a hash of the
   // row id so name/email are deterministic per row (reference analog:
@@ -44,12 +44,14 @@ object EventGenerator {
     "wilson", "anderson", "thomas", "taylor", "moore", "martin", "white", "clark")
   val Domains: Seq[String] = Seq("example.com", "test.org", "mail.net", "demo.io")
 
-  /** Deterministic index into a lookup array: low 8 hex digits of md5 mod n.
-    * (conv(hex) keeps it portable to the DuckDB oracle, unlike xxhash64.)
+  /** Deterministic index into a lookup array: the md5's first 4 bytes
+    * (its leading 8 hex digits) mod n, via the one-pass [[graft.functions.Md5Index]]
+    * kernel. The oracle SQL spells the same value as
+    * pmod(conv(substring(md5(..), 1, 8), 16, 10), n) — portable to DuckDB,
+    * unlike xxhash64.
     */
   private def pickIdx(id: Column, seed: Long, tag: String, n: Int): Column =
-    pmod(conv(substring(md5(concat(lit(s"$tag:$seed:"), id.cast("string"))), 1, 8), 16, 10)
-      .cast("long"), lit(n.toLong))
+    Md5Index(md5Input(id, seed, tag), n)
 
   private def pick(vals: Seq[String], id: Column, seed: Long, tag: String): Column = {
     val arr = array(vals.map(lit): _*)

@@ -127,8 +127,10 @@ object CoreQueries extends QueryPack {
   /** q05 — ST1 batch analog: inject "late duplicates" (every 10th event
     * re-emitted 1 min later with a corrupted value), dedup keep-first per
     * event_id. The oracle proves first-occurrence-wins: any late duplicate
-    * surviving would flip value/hash. Dedup.keepFirst is one hash-agg
-    * shuffle with map-side combine — the scalable form.
+    * surviving would flip value/hash. Dedup.keepFirst is the same
+    * ROW_NUMBER() = 1 as the oracle SQL, planned as one key shuffle between
+    * a map-side partial WindowGroupLimit and the final one — the scalable
+    * form.
     */
   private def q05(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)

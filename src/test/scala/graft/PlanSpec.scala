@@ -1,8 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 
 /** Plan-shape regression tests — the automated `.explain` audit. These pin
   * the physical properties that matter at 100 TB: filters and projections
@@ -16,6 +20,12 @@ class PlanSpec extends SparkSpecBase {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
+
+  /** Every operator of a final plan, descending into AQE query stages. */
+  private def operators(p: SparkPlan): Seq[SparkPlan] = p match {
+    case q: QueryStageExec => q +: operators(q.plan)
+    case _ => p +: p.children.flatMap(operators)
+  }
 
   /** Formatted explain — node fields (PushedFilters, ReadSchema) untruncated,
     * unlike executedPlan.toString.
@@ -173,11 +183,23 @@ class PlanSpec extends SparkSpecBase {
     assert(!s.contains("CartesianProduct"))
   }
 
+  // The title is kept as this test's stable name. What it pins: keep-first
+  // shuffles once on the key, with a Partial WindowGroupLimit below that
+  // exchange as the map-side combine, and no SortAggregate on either side.
   test("dedup keepFirst is a single-exchange hash aggregate, not a window sort") {
-    val df = run("q05_dedup_keep_first")
-    val s = planString(df)
-    assert(!s.contains("Window"), "keep-first must partial-aggregate, not rank")
-    assert(s.contains("min_by") || s.contains("HashAggregate"))
+    val ops = operators(planOf(run("q05_dedup_keep_first")))
+    val keyExchanges = ops.collect { case e: ShuffleExchangeExec => e }
+      .filter(_.outputPartitioning match {
+        case h: HashPartitioning => h.references.toSeq.map(_.name) == Seq("event_id")
+        case _ => false
+      })
+    assert(keyExchanges.size == 1, s"exactly one hash exchange on the key: $keyExchanges")
+    assert(operators(keyExchanges.head.child).exists {
+      case w: WindowGroupLimitExec => w.mode == Partial
+      case _ => false
+    }, "keep-first must cut each key to one row map-side, below the key exchange")
+    assert(!ops.exists(_.isInstanceOf[SortAggregateExec]),
+      "no interpreted sort-aggregate on either side of the exchange")
   }
 
   test("mapping projection folds into the scan (no extra exchange)") {
