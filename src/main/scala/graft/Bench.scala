@@ -184,8 +184,8 @@ object Bench {
     val unique = (sent / 1.1).toLong
     def pipeline(): Unit = {
       val gen = EventGenerator.generate(spark, unique, seed = 42L)
-      val dupes = gen.where(col("row_id") < sent - unique)
-      val dd = Dedup.tumbling(gen.unionAll(dupes), Seq("event_id"),
+      val injected = DuplicateInjector.injectFirst(gen, col("row_id"), sent - unique)
+      val dd = Dedup.tumbling(injected, Seq("event_id"),
         to_timestamp(col("created_at")), Duration.parse("8h").millis, col("row_id"))
       val projected = MappingProjection(dd, Seq(
         FieldMapping("event_id", "event_id", "uuid"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.{Duration, FieldMapping}
-import graft.operators.{Dedup, EventGenerator, MappingProjection}
+import graft.operators.{Dedup, DuplicateInjector, EventGenerator, MappingProjection}
 
 /** O2/O4 — the variant loop: resume anti-join, per-variant pipeline run,
   * metric derivation, CSV append (reference: src/test_executor.py:35-107,
@@ -86,8 +86,7 @@ final class TestExecutor(testId: String, resultsDir: String,
     // exact reference arithmetic: sent = unique + duplicates.
     val gen = EventGenerator.generate(spark, unique, seed = 42L,
       numPartitions = numProcesses)
-    val dupes = gen.where(col("row_id") < duplicates)
-    val sent = gen.unionAll(dupes)
+    val sent = DuplicateInjector.injectFirst(gen, col("row_id"), duplicates)
 
     // The topic boundary: publish parallelism (num_processes, the
     // reference's producer-pool size) must not leak into the engine — in

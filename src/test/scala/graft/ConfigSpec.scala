@@ -52,7 +52,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("duplicate arithmetic (reference src/generate_events.py:31-39)") {
-    import graft.operators.DuplicateInjector._
+    import graft.harness.Metrics._
     assert(uniqueOf(5000000L, 0.1) == 4545454L)
     assert(duplicatesOf(5000000L, 0.1) == 454546L)
     assert(uniqueOf(5000000L, 0.1) + duplicatesOf(5000000L, 0.1) == 5000000L)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, RangeExec, SparkPlan, UnionExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -200,6 +200,39 @@ class PlanSpec extends SparkSpecBase {
     }, "keep-first must cut each key to one row map-side, below the key exchange")
     assert(!ops.exists(_.isInstanceOf[SortAggregateExec]),
       "no interpreted sort-aggregate on either side of the exchange")
+  }
+
+  test("injectEveryK plans one Range scan, no Union, the Generate in its codegen stage") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{DuplicateInjector, EventGenerator}
+    val sent = DuplicateInjector.injectEveryK(EventGenerator.generate(spark, 1000L),
+      col("row_id"), 10)
+    val ops = operators(planOf(sent))
+    assert(ops.count(_.isInstanceOf[RangeExec]) == 1, "the source is scanned once")
+    assert(!ops.exists(_.isInstanceOf[UnionExec]), "no self-union")
+    assert(ops.exists {
+      case w: WholeStageCodegenExec =>
+        val inStage = operators(w.child)
+        inStage.exists(_.isInstanceOf[GenerateExec]) && inStage.exists(_.isInstanceOf[RangeExec])
+      case _ => false
+    }, "the expansion runs in the generator's whole-stage codegen stage")
+  }
+
+  test("tumbling dedup over injectEveryK shuffles each unique event once") {
+    import org.apache.spark.sql.functions.{col, to_timestamp}
+    import graft.operators.{Dedup, DuplicateInjector, EventGenerator}
+    val sent = DuplicateInjector.injectEveryK(EventGenerator.generate(spark, 20000L),
+      col("row_id"), 10)
+    val deduped = Dedup.tumbling(sent, Seq("event_id"), to_timestamp(col("created_at")),
+      8L * 3600 * 1000, col("row_id"))
+    assert(deduped.collect().length == 20000)
+    val exchanges = operators(planOf(deduped)).collect { case e: ShuffleExchangeExec => e }
+      .filter(_.outputPartitioning.isInstanceOf[HashPartitioning])
+    assert(exchanges.size == 1, s"one dedup exchange: $exchanges")
+    // every duplicate sits next to its original in the same partition, so
+    // the partial WindowGroupLimit drops it before the exchange
+    assert(exchanges.head.metrics("shuffleRecordsWritten").value == 20000L,
+      "the exchange carries exactly one row per unique event")
   }
 
   test("mapping projection folds into the scan (no extra exchange)") {
