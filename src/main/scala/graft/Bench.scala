@@ -187,12 +187,7 @@ object Bench {
       val injected = DuplicateInjector.injectFirst(gen, col("row_id"), sent - unique)
       val dd = Dedup.tumbling(injected, Seq("event_id"),
         to_timestamp(col("created_at")), Duration.parse("8h").millis, col("row_id"))
-      val projected = MappingProjection(dd, Seq(
-        FieldMapping("event_id", "event_id", "uuid"),
-        FieldMapping("user_id", "user_id", "uuid"),
-        FieldMapping("created_at", "created_at", "datetime"),
-        FieldMapping("name", "user_name", "string"),
-        FieldMapping("email", "user_email", "string")))
+      val projected = MappingProjection(dd, FieldMapping.reference)
       require(projected.count() == unique, "dedup must recover the unique set")
     }
     // Pipeline measurement defends itself the way the sentinel defends the

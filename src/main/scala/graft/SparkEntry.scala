@@ -31,12 +31,7 @@ object SparkEntry {
     val sent = DuplicateInjector.injectEveryK(gen, col("row_id"), 10)
     val dedup = Dedup.keepFirst(sent, Seq("event_id"),
       to_timestamp(col("created_at")), col("row_id"))
-    MappingProjection(dedup, Seq(
-      FieldMapping("event_id", "event_id", "uuid"),
-      FieldMapping("user_id", "user_id", "uuid"),
-      FieldMapping("created_at", "created_at", "datetime"),
-      FieldMapping("name", "user_name", "string"),
-      FieldMapping("email", "user_email", "string")))
+    MappingProjection(dedup, FieldMapping.reference)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

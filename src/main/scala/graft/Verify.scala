@@ -13,10 +13,12 @@ object Verify {
     // optional comma-separated filter for targeted local checks; the driver
     // always passes exactly two args and gets the full suite
     val only = args.lift(2).map(_.split(',').toSet)
+    // the session comes first: building the registry reads Scale knobs,
+    // which see spark.graft.scale.* overrides only through a live session
+    val spark = GraftSession.local("graft-verify")
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n))
     }
-    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -54,6 +56,11 @@ object Verify {
     val json = oracles
       .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // a knob read with no session reachable means the dumped results and
+    // the oracle SQL may disagree on an overridden profile
+    if (graft.config.Scale.sawOffSessionFallback)
+      throw new IllegalStateException("Verify: a Scale knob was read with " +
+        "no SparkSession reachable; spark.graft.scale.* overrides were lost")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

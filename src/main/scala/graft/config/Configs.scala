@@ -15,6 +15,18 @@ final case class SchemaField(name: String, fieldType: String)
   */
 final case class FieldMapping(fieldName: String, columnName: String, columnType: String)
 
+object FieldMapping {
+  /** The reference pipeline's sink mapping
+    * (config/glassflow/deduplication_pipeline.json:68-99).
+    */
+  val reference: Seq[FieldMapping] = Seq(
+    FieldMapping("event_id", "event_id", "uuid"),
+    FieldMapping("user_id", "user_id", "uuid"),
+    FieldMapping("created_at", "created_at", "datetime"),
+    FieldMapping("name", "user_name", "string"),
+    FieldMapping("email", "user_email", "string"))
+}
+
 /** Dedup declaration (reference: deduplication_pipeline.json:44-49). */
 final case class DedupConfig(enabled: Boolean, idField: String, timeWindow: Duration)
 

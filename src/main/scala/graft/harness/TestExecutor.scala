@@ -31,12 +31,8 @@ final class TestExecutor(testId: String, resultsDir: String,
     * integration), else the reference's shipped mapping
     * (config/glassflow/deduplication_pipeline.json:68-99).
     */
-  private val sinkMapping = pipelineConfig.map(_.sink.tableMapping).getOrElse(Seq(
-    FieldMapping("event_id", "event_id", "uuid"),
-    FieldMapping("user_id", "user_id", "uuid"),
-    FieldMapping("created_at", "created_at", "datetime"),
-    FieldMapping("name", "user_name", "string"),
-    FieldMapping("email", "user_email", "string")))
+  private val sinkMapping =
+    pipelineConfig.map(_.sink.tableMapping).getOrElse(FieldMapping.reference)
 
   /** Run all variants with resume (reference: run_tests loop,
     * src/test_executor.py:86-107). Returns the results of this session.
