@@ -1,10 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-import graft.config.{Duration, FieldMapping}
-import graft.operators.{Dedup, DuplicateInjector, EventGenerator, MappingProjection}
-
 object Bench {
 
   /** One timed execution; -1 on failure. */
@@ -182,14 +177,9 @@ object Bench {
     // is measurement contamination, not pipeline cost.
     val sent = 2000000L
     val unique = (sent / 1.1).toLong
-    def pipeline(): Unit = {
-      val gen = EventGenerator.generate(spark, unique, seed = 42L)
-      val injected = DuplicateInjector.injectFirst(gen, col("row_id"), sent - unique)
-      val dd = Dedup.tumbling(injected, Seq("event_id"),
-        to_timestamp(col("created_at")), Duration.parse("8h").millis, col("row_id"))
-      val projected = MappingProjection(dd, FieldMapping.reference)
-      require(projected.count() == unique, "dedup must recover the unique set")
-    }
+    def pipeline(): Unit =
+      require(ReferencePipeline(spark, unique, sent - unique).count() == unique,
+        "dedup must recover the unique set")
     // Pipeline measurement defends itself the way the sentinel defends the
     // sweep. This box OSCILLATES between a clean regime (~2M rps) and a
     // slow regime (~150-400k rps) on tens-of-seconds timescales — measured

@@ -13,14 +13,12 @@ import graft.harness.GridGenerator.{ParamRange, ParamValues}
   *   graft.Main single --test-id T --records 100000 [--processes 4] ...
   *   graft.Main results --results-file results/T_results.csv
   *   graft.Main query  --name q01_pricing_summary --sf-dir /root/testdata/sf0.001
-  *                     [--limit 20] [--explain] [--time [runs]]
-  *                     (or --name list to enumerate)
+  *                     [--limit 20] (or --name list to enumerate)
   */
 object Main {
 
   /** `--key value` pairs plus bare `--flag`s (mapped to ""), so boolean
-    * flags (--no-resume, --explain, --time) don't shift the pairing of
-    * whatever follows them.
+    * flags (--no-resume) don't shift the pairing of whatever follows them.
     */
   private[graft] def parseArgs(args: Seq[String]): Map[String, String] = {
     val out = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -61,8 +59,9 @@ object Main {
       sys.exit(2)
   }
 
-  /** Run any registered library query against a testdata directory — the
-    * CLI face of SparkEntry.queries.
+  /** Run any registered library query against a testdata directory and
+    * show its rows — the CLI face of SparkEntry.queries (`graft.Explain`
+    * times one and prints its plan).
     */
   private def query(opts: Map[String, String]): Unit = {
     val name = opts.getOrElse("name", "list")
@@ -77,29 +76,8 @@ object Main {
     val spark = session()
     try {
       val df = fn(spark, dir)
-      if (opts.contains("explain")) {
-        // the plan-audit affordance: the same formatted explain PlanSpec
-        // pins (untruncated PushedFilters/ReadSchema node fields). Execute
-        // the query's own physical plan (AQE finalizes on execution) without
-        // collecting rows to the driver — an RDD count discards them on the
-        // executors.
-        df.queryExecution.toRdd.count()
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-      } else if (opts.contains("time")) {
-        val runs = math.max(1, intOpt(opts, "time", 3))
-        val times = (1 to runs).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, dir).count()
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        println(f"[query] $name runs=$runs median=${times(times.size / 2)}%.3f" +
-          f"s min=${times.head}%.3fs max=${times.last}%.3fs")
-      } else {
-        val n = df.count()
-        println(s"[query] $name rows=$n")
-        df.show(limit, truncate = false)
-      }
+      println(s"[query] $name rows=${df.count()}")
+      df.show(limit, truncate = false)
     } finally spark.stop()
   }
 
@@ -110,7 +88,8 @@ object Main {
     val hasPipeCfg = opts.get("pipeline-config").exists(_.nonEmpty)
     // dedup/sink axes: explicit flag wins; otherwise a loaded pipeline
     // config supplies them (axis omitted → executor falls back to it);
-    // otherwise the reference defaults
+    // otherwise the reference config's values
+    val ref = graft.config.PipelineConfig.reference
     def optAxis(name: String, flag: String, default: String,
                 mk: String => GridGenerator.ParamSpec): Seq[(String, GridGenerator.ParamSpec)] =
       opts.get(flag).filter(_.nonEmpty) match {
@@ -123,10 +102,11 @@ object Main {
       "total_records" -> ParamValues(longs(strOpt(opts, "records", "100000"))),
       "duplication_rate" -> ParamValues(
         strOpt(opts, "dup-rate", "0.1").split(",").toSeq.map(_.trim.toDouble))) ++
-      optAxis("deduplication_window", "dedup-window", "8h",
+      optAxis("deduplication_window", "dedup-window", ref.dedup.timeWindow.toString,
         v => ParamValues(v.split(",").toSeq.map(_.trim))) ++
-      optAxis("max_batch_size", "batch-size", "5000", v => ParamValues(longs(v))) ++
-      optAxis("max_delay_time", "max-delay", "10s",
+      optAxis("max_batch_size", "batch-size", ref.sink.maxBatchSize.toString,
+        v => ParamValues(longs(v))) ++
+      optAxis("max_delay_time", "max-delay", ref.sink.maxDelayTime.toString,
         v => ParamValues(v.split(",").toSeq.map(_.trim)))
     val all = GridGenerator.combinations(axes)
     val variants =

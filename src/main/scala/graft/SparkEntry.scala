@@ -1,10 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.config.FieldMapping
-import graft.operators.{Dedup, DuplicateInjector, EventGenerator, MappingProjection}
 import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -20,19 +17,12 @@ object SparkEntry {
   // caching would freeze the first session's knob values forever
   private def all: Seq[QueryDef] = packs.flatMap(_.defs)
 
-  /** Flagship: the reference's whole pipeline, batch form —
-    * S1 generator → S2 duplicate injection → ST1 keep-first dedup →
-    * P1 mapping projection into the reference sink schema
-    * (reference: config/glassflow/deduplication_pipeline.json:68-99).
+  /** Flagship: the reference's whole pipeline, batch form — the
+    * [[ReferencePipeline]] over 1000 unique events plus 100 re-emitted
+    * copies, deduped back to the 1000 in the reference sink schema.
     * Driver smoke-checks rows>0 on sf0.001.
     */
-  def entry(spark: SparkSession): DataFrame = {
-    val gen = EventGenerator.generate(spark, 1000L, seed = 42L)
-    val sent = DuplicateInjector.injectEveryK(gen, col("row_id"), 10)
-    val dedup = Dedup.keepFirst(sent, Seq("event_id"),
-      to_timestamp(col("created_at")), col("row_id"))
-    MappingProjection(dedup, FieldMapping.reference)
-  }
+  def entry(spark: SparkSession): DataFrame = ReferencePipeline(spark, 1000, 100)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

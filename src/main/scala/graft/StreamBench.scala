@@ -299,15 +299,17 @@ object StreamBench {
       .otherwise(lit(100000L) +
         (pmod(hash(col("value")), lit(2001)) - lit(1000)).cast("long"))
 
-  /** The default arm (SPARK_GRAFT_STREAM_OP unset or `dedup`): keyed
-    * watermarked dedup over an 8 h window → the reference sink mapping's
-    * uuid/uuid/datetime columns. Reported rate is sunk rows/s.
+  /** The default arm (SPARK_GRAFT_STREAM_OP unset or `dedup`): the
+    * reference config's streaming transform — keyed watermarked dedup over
+    * an 8 h window → the reference sink mapping's uuid/uuid/datetime
+    * columns (all the rate source carries). Reported rate is sunk rows/s.
     */
   private val dedup = StreamArm("dedup", "stream_rps",
-    frame = (spark, rps) => graft.operators.MappingProjection(
-      StreamingDedup.withinWatermark(StreamingPipeline.rateSource(spark, rps),
-        Seq("event_id"), "ts", Duration.parse("8h")),
-      FieldMapping.reference.take(3)),
+    frame = (spark, rps) => {
+      val ref = PipelineConfig.reference
+      StreamingPipeline.transform(StreamingPipeline.rateSource(spark, rps),
+        ref.copy(sink = ref.sink.copy(tableMapping = ref.sink.tableMapping.take(3))), "ts")
+    },
     value = _.sunkRows,
     fields = r => Seq("unit" -> "rows/sec", "rows" -> r.sunkRows))
 

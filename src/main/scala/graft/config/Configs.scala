@@ -58,6 +58,21 @@ final case class PipelineConfig(
     join: Option[JoinConfig],
     sink: SinkConfig)
 
+object PipelineConfig {
+  /** The shipped reference config (config/glassflow/deduplication_pipeline.json):
+    * keep the first `event_id` within 8h, no join, sink batches of 5000 rows
+    * or 10s, the [[FieldMapping.reference]] mapping. The one home of these
+    * defaults — the JSON codec, the CLI and the test executor all read it.
+    */
+  val reference: PipelineConfig = PipelineConfig(
+    pipelineId = "pipeline",
+    sourceSchema = FieldMapping.reference.map(m => SchemaField(m.fieldName, "string")),
+    dedup = DedupConfig(enabled = true, idField = "event_id", Duration.parse("8h")),
+    join = None,
+    sink = SinkConfig(table = "events", maxBatchSize = 5000,
+      maxDelayTime = Duration.parse("10s"), tableMapping = FieldMapping.reference))
+}
+
 /** Go-style duration strings "10s" / "1h" / "8h" (reference:
   * src/models.py:33-38,45-50). Supports ms/s/m/h/d.
   */

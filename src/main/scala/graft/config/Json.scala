@@ -147,6 +147,7 @@ object PipelineConfigJson {
   import Json.JsonOps
 
   def fromJson(text: String): PipelineConfig = {
+    val ref = PipelineConfig.reference
     val root = Json.parse(text)
     val source = root.obj("source")
     val topic = source.list("topics").head.asObj
@@ -155,9 +156,9 @@ object PipelineConfigJson {
     }
     val dedupObj = topic.get("deduplication").map(_.asObj)
     val dedup = dedupObj.map { d =>
-      DedupConfig(d.boolOr("enabled", true), d.strOr("id_field", "event_id"),
-        Duration.parse(d.strOr("time_window", "8h")))
-    }.getOrElse(DedupConfig(enabled = false, "event_id", Duration.parse("8h")))
+      DedupConfig(d.boolOr("enabled", true), d.strOr("id_field", ref.dedup.idField),
+        Duration.parse(d.strOr("time_window", ref.dedup.timeWindow.toString)))
+    }.getOrElse(ref.dedup.copy(enabled = false))
     val join = root.asObj.get("join").map(_.asObj).map { j =>
       JoinConfig(j.boolOr("enabled", false),
         j.strOr("join_key", "event_id"), Duration.parse(j.strOr("time_window", "1h")))
@@ -167,14 +168,15 @@ object PipelineConfigJson {
       FieldMapping(m.str("field_name"), m.str("column_name"), m.str("column_type"))
     }
     PipelineConfig(
-      pipelineId = root.strOr("pipeline_id", "pipeline"),
+      pipelineId = root.strOr("pipeline_id", ref.pipelineId),
       sourceSchema = schemaFields,
       dedup = dedup,
       join = join,
       sink = SinkConfig(
         table = sinkObj.str("table"),
         maxBatchSize = sinkObj.long("max_batch_size").toInt,
-        maxDelayTime = Duration.parse(sinkObj.strOr("max_delay_time", "10s")),
+        maxDelayTime = Duration.parse(
+          sinkObj.strOr("max_delay_time", ref.sink.maxDelayTime.toString)),
         tableMapping = mapping))
   }
 

@@ -3,7 +3,6 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.DataTypeMismatch
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -119,17 +118,7 @@ private[functions] object Md5Fields {
     md.digest()
   }
 
-  /** Analysis-time input contract: a string child, or a named
-    * DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE error instead of wrong rows.
-    */
-  def requireString(child: Expression): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => DataTypeMismatch(
-      errorSubClass = "UNEXPECTED_INPUT_TYPE",
-      messageParameters = Map(
-        "paramIndex" -> "first",
-        "requiredType" -> "\"STRING\"",
-        "inputSql" -> s"\"${child.sql}\"",
-        "inputType" -> s"\"${other.sql}\""))
-  }
+  /** A string child, else a named analysis error (see [[InputTypes]]). */
+  def requireString(child: Expression): TypeCheckResult =
+    InputTypes.require(child, "\"STRING\"")(_.isInstanceOf[StringType])
 }

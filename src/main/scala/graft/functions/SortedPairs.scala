@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -22,6 +23,8 @@ import org.apache.spark.sql.types._
   * Input arrays are group-bounded by construction at every call site
   * (df-capped CollectCapped groups, per-order baskets); the exact-size
   * allocation is the same k(k−1)/2 structs the flatten form materialized.
+  * The input must be `array<bigint>` without null elements — the kernel
+  * reads raw longs — and anything else fails at analysis time.
   */
 case class SortedPairs(child: Expression) extends UnaryExpression {
 
@@ -30,6 +33,10 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
     StructField("pb", LongType, nullable = false))), containsNull = false)
 
   override def prettyName: String = "sorted_pairs"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    InputTypes.require(child, "\"ARRAY<BIGINT>\" without null elements")(
+      _ == ArrayType(LongType, containsNull = false))
 
   override def nullSafeEval(input: Any): Any =
     SortedPairs.compute(input.asInstanceOf[ArrayData])

@@ -2,15 +2,18 @@ package graft.harness
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Whole-run task-metric totals, for locating where a scale-up's time goes
-  * (GC? shuffle? spill?). Attach with [[Profiling.attach]]; read a snapshot
+/** Whole-run job, stage and task-metric totals, for locating where a
+  * scale-up's time goes (GC? shuffle? spill?). Attach with [[Profiling.attach]]; read a snapshot
   * line with [[Profiling.report]]. Counters are LongAdders, so the listener
   * adds no contention to the task-end path.
   */
 final class Profiling extends SparkListener {
+  val jobs             = new LongAdder
+  val stages           = new LongAdder
   val taskTimeMs       = new LongAdder
   val gcTimeMs         = new LongAdder
   val shuffleWriteB    = new LongAdder
@@ -19,6 +22,9 @@ final class Profiling extends SparkListener {
   val diskSpillB       = new LongAdder
   val inputB           = new LongAdder
   val outputB          = new LongAdder
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = jobs.increment()
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.increment()
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val m = t.taskMetrics
@@ -37,15 +43,16 @@ final class Profiling extends SparkListener {
   private def gibStr(b: Long): String = f"${b / 1073741824.0}%.2f"
 
   def report: String =
-    s"taskTimeSec=${taskTimeMs.sum / 1000} gcSec=${gcTimeMs.sum / 1000} " +
+    s"jobs=${jobs.sum} stages=${stages.sum} " +
+      s"taskTimeSec=${taskTimeMs.sum / 1000} gcSec=${gcTimeMs.sum / 1000} " +
       s"shufWriteGiB=${gibStr(shuffleWriteB.sum)} " +
       s"shufReadGiB=${gibStr(shuffleReadB.sum)} " +
       s"memSpillGiB=${gibStr(memSpillB.sum)} " +
       s"diskSpillGiB=${gibStr(diskSpillB.sum)} " +
       s"inputGiB=${gibStr(inputB.sum)} outputGiB=${gibStr(outputB.sum)}"
 
-  def reset(): Unit = Seq(taskTimeMs, gcTimeMs, shuffleWriteB, shuffleReadB,
-    memSpillB, diskSpillB, inputB, outputB).foreach(_.reset())
+  def reset(): Unit = Seq(jobs, stages, taskTimeMs, gcTimeMs, shuffleWriteB,
+    shuffleReadB, memSpillB, diskSpillB, inputB, outputB).foreach(_.reset())
 }
 
 object Profiling {

@@ -2,11 +2,11 @@ package graft.harness
 
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
-import graft.config.{Duration, FieldMapping}
-import graft.operators.{Dedup, DuplicateInjector, EventGenerator, MappingProjection}
+import graft.ReferencePipeline
+import graft.config.{Duration, PipelineConfig, PipelineConfigJson}
 
 /** O2/O4 — the variant loop: resume anti-join, per-variant pipeline run,
   * metric derivation, CSV append (reference: src/test_executor.py:35-107,
@@ -14,25 +14,21 @@ import graft.operators.{Dedup, DuplicateInjector, EventGenerator, MappingProject
   *
   * The Spark engine replaces every external boundary of the reference run
   * (multiprocessing pool → executor partitions; Kafka+GlassFlow+ClickHouse →
-  * the in-engine dedup pipeline and a parquet sink), so one variant is:
-  *   generate `unique` events across `num_processes` partitions →
-  *   re-emit `duplicates` of them → keep-first dedup → mapping projection →
-  *   sink → exact-count oracle (added == unique, the reference's success
-  *   criterion src/pipeline_test.py:21-23).
+  * the in-engine dedup pipeline and a parquet sink), so one variant is the
+  * [[ReferencePipeline]] under the variant's config: `sent` across
+  * `num_processes` partitions → topic hop → `transform` → sink →
+  * exact-count oracle (added == unique, the reference's success criterion
+  * src/pipeline_test.py:21-23).
   */
 final class TestExecutor(testId: String, resultsDir: String,
                          spark: SparkSession,
-                         pipelineConfig: Option[graft.config.PipelineConfig] = None) {
+                         pipelineConfig: Option[PipelineConfig] = None) {
 
   private val resultsPath = s"$resultsDir/${testId}_results.csv"
   val resultsIO = new ResultsIO(resultsPath)
 
-  /** Sink mapping: from the loaded pipeline config when given (S14 → P1
-    * integration), else the reference's shipped mapping
-    * (config/glassflow/deduplication_pipeline.json:68-99).
-    */
-  private val sinkMapping =
-    pipelineConfig.map(_.sink.tableMapping).getOrElse(FieldMapping.reference)
+  /** The loaded pipeline config (S14), else the shipped reference. */
+  private val base = pipelineConfig.getOrElse(PipelineConfig.reference)
 
   /** Run all variants with resume (reference: run_tests loop,
     * src/test_executor.py:86-107). Returns the results of this session.
@@ -62,14 +58,16 @@ final class TestExecutor(testId: String, resultsDir: String,
     val numProcesses = cfg.getOrElse("num_processes", 1).toString.toDouble.toInt
     val totalRecords = cfg.getOrElse("total_records", 0L).toString.toDouble.toLong
     val dupRate = cfg.getOrElse("duplication_rate", 0.1).toString.toDouble
-    // swept variant values override; the loaded pipeline config (if any)
-    // supplies defaults (reference: src/pre_process.py:17-35 point-updates)
+    // swept variant values override; the base config supplies defaults
+    // (reference: src/pre_process.py:17-35 point-updates)
     val dedupWindow = cfg.getOrElse("deduplication_window",
-      pipelineConfig.map(_.dedup.timeWindow.toString).getOrElse("8h")).toString
+      base.dedup.timeWindow.toString).toString
     val maxBatchSize = cfg.getOrElse("max_batch_size",
-      pipelineConfig.map(_.sink.maxBatchSize).getOrElse(5000)).toString.toDouble.toInt
+      base.sink.maxBatchSize).toString.toDouble.toInt
     val maxDelayTime = cfg.getOrElse("max_delay_time",
-      pipelineConfig.map(_.sink.maxDelayTime.toString).getOrElse("10s")).toString
+      base.sink.maxDelayTime.toString).toString
+    val variantCfg = PipelineConfigJson.rewriteForVariant(base, variantId,
+      Duration.parse(dedupWindow), maxBatchSize, Duration.parse(maxDelayTime))
 
     val unique = Metrics.uniqueOf(totalRecords, dupRate)
     val duplicates = Metrics.duplicatesOf(totalRecords, dupRate)
@@ -80,9 +78,7 @@ final class TestExecutor(testId: String, resultsDir: String,
     // executor-parallel replacement for the reference's process pool,
     // src/utils/publish.py:19-59) and re-emit the first `duplicates` rows —
     // exact reference arithmetic: sent = unique + duplicates.
-    val gen = EventGenerator.generate(spark, unique, seed = 42L,
-      numPartitions = numProcesses)
-    val sent = DuplicateInjector.injectFirst(gen, col("row_id"), duplicates)
+    val sent = ReferencePipeline.sent(spark, unique, duplicates, numProcesses)
 
     // The topic boundary: publish parallelism (num_processes, the
     // reference's producer-pool size) must not leak into the engine — in
@@ -93,24 +89,19 @@ final class TestExecutor(testId: String, resultsDir: String,
     // tasks each cutting ~23M keys (measured on the earlier min_by
     // aggregate plan: 3 of 32 cores busy, 55 GiB RSS, rps halved vs
     // 20M — the scale cliff). Partitioning BY THE DEDUP KEY keeps total
-    // shuffles at one: the keep-first window over (event_id, bucket)
-    // downstream is satisfied by hashpartitioning(event_id) and adds no
+    // shuffles at one: the keep-first window over (key, bucket)
+    // downstream is satisfied by hashpartitioning(key) and adds no
     // second exchange.
     val topic = sent.repartition(spark.sparkContext.defaultParallelism,
-      col("event_id"))
+      col(variantCfg.dedup.idField))
 
     // The engine: windowed keep-first dedup + sink projection.
-    val deduped = Dedup.tumbling(topic, Seq("event_id"),
-      to_timestamp(col("created_at")), Duration.parse(dedupWindow).millis,
-      col("row_id"))
-    val projected = MappingProjection(deduped, sinkMapping)
+    val projected = ReferencePipeline.transform(topic, variantCfg)
 
-    val publishEndNs = System.nanoTime() // plan built; real work happens in the sink write
     projected.write.mode("overwrite").parquet(sinkDir)
     val writeEndNs = System.nanoTime()
 
     // Count-convergence oracle (batch: one exact count).
-    val pollStartNs = System.nanoTime()
     val added = spark.read.parquet(sinkDir).count()
     val pollEndNs = System.nanoTime()
 
@@ -138,7 +129,7 @@ final class TestExecutor(testId: String, resultsDir: String,
       resultSuccess = Some(success),
       resultTimeTakenMs = Some(math.round(timeTakenMs).toDouble),
       resultAvgLatencyMs = Some(Metrics.avgLatencyMs(timeTakenMs, totalRecords)),
-      resultLagMs = Some(math.round((pollEndNs - pollStartNs) / 1e6).toDouble),
+      resultLagMs = Some(math.round((pollEndNs - writeEndNs) / 1e6).toDouble),
       resultGlassflowRps = Some(Metrics.engineRps(totalRecords, timeTakenMs)))
   }
 }

@@ -36,9 +36,6 @@ object Dedup {
   private def byKeyInOrder(key: Seq[String], ts: Column, tiebreak: Column) =
     Window.partitionBy(key.map(col): _*).orderBy(ts, tiebreak)
 
-  /** Exact-duplicate elimination on a full row (training-data exact dedup). */
-  def exact(df: DataFrame): DataFrame = df.dropDuplicates()
-
   /** Tumbling-window dedup: keep the first occurrence per (key, window
     * bucket). The deterministic batch analog of "suppress duplicates within
     * time_window": duplicates landing in the same `windowMillis` bucket as

@@ -21,9 +21,11 @@ import org.apache.spark.sql.functions._
   * exchange. A row whose re-emit predicate is null is emitted once.
   *
   *  - `injectEveryK`: fully deterministic — re-emit every k-th row (ratio =
-  *    1/k). Used by oracle-checked queries since any SQL engine reproduces it.
-  *  - `injectFirst`: re-emit the rows with `rowId < n` — the harness's exact
-  *    reference arithmetic, sent = unique + duplicates.
+  *    1/k), spreading copies evenly over the partitions. No oracle-checked
+  *    query uses it; the benchmark's batch pipeline and the tests do.
+  *  - `injectFirst`: re-emit the rows with `rowId < n` — the exact reference
+  *    arithmetic, sent = unique + duplicates, and the form
+  *    [[graft.ReferencePipeline]] uses.
   *  - `injectSampled`: seeded Bernoulli draw, the production analog of the
   *    reference's random re-emission.
   */

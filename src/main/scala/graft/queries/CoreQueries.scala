@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{ReferencePipeline, Tables}
 import graft.config.FieldMapping
-import graft.operators.{Dedup, DuplicateInjector, EventGenerator, MappingProjection}
+import graft.operators.{Dedup, MappingProjection}
 
 /** Core relational + reference-pipeline operator queries (SURVEY.md §2).
   *
@@ -282,21 +282,17 @@ object CoreQueries extends QueryPack {
       |  CAST(CASE WHEN i = 0 THEN total // 7 + total % 7 ELSE total // 7 END AS BIGINT) AS records
       |FROM t, range(7) r(i) ORDER BY i""".stripMargin
 
-  /** q12 — S1+S2+ST1 end-to-end: deterministic generator → duplicate
-    * injection (every 10th) → keep-first dedup → per-domain counts. The
-    * oracle regenerates the same md5-derived rows in DuckDB; a dedup failure
-    * would inflate counts (the reference's exact-count oracle,
-    * src/pipeline_test.py:21-23).
+  /** q12 — the [[graft.ReferencePipeline]] end-to-end: 5000 generated
+    * events with the first 500 re-emitted → keep-first dedup → sink mapping
+    * → per-domain counts. The oracle regenerates the same md5-derived rows
+    * in DuckDB; a dedup failure would inflate counts (the reference's
+    * exact-count oracle, src/pipeline_test.py:21-23).
     */
-  private def q12(s: SparkSession, dir: String): DataFrame = {
-    val gen = EventGenerator.generate(s, 5000L, seed = 42L)
-    val sent = DuplicateInjector.injectEveryK(gen, col("row_id"), 10)
-    val dedup = Dedup.keepFirst(sent, Seq("event_id"),
-      to_timestamp(col("created_at")), col("row_id"))
-    dedup.groupBy(substring_index(col("email"), "@", -1).as("domain"))
+  private def q12(s: SparkSession, dir: String): DataFrame =
+    ReferencePipeline(s, 5000, 500)
+      .groupBy(substring_index(col("user_email"), "@", -1).as("domain"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("domain"))
-  }
 
   private val q12Sql =
     """WITH g AS (

@@ -102,6 +102,23 @@ class HarnessSpec extends SparkSpecBase {
     assert(table.contains(f"${r.durationSec}%.2f seconds"))
   }
 
+  test("executor: a config with dedup disabled sinks every sent row and fails the oracle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_exec_nodedup").toString
+    val ref = graft.config.PipelineConfig.reference
+    val noDedup = ref.copy(dedup = ref.dedup.copy(enabled = false))
+    val exec = new TestExecutor("t2", dir, spark, Some(noDedup))
+    val cfg = Map[String, Any](
+      "num_processes" -> 2L, "total_records" -> 11000L,
+      "duplication_rate" -> 0.1, "deduplication_window" -> "1h30m")
+    val r = exec.runTests(Seq(cfg), resume = false, sinkRoot = s"$dir/sink").head
+    assert(spark.read.parquet(s"$dir/sink/${r.variantId}").count() == 11000,
+      "10000 unique + 1000 re-emitted, none dropped")
+    assert(r.resultSuccess.contains(false), "added != unique (the count oracle)")
+    // the results CSV keeps the variant's raw strings; absent axes read the config
+    assert(r.paramDeduplicationWindow == "1h30m")
+    assert(r.paramMaxBatchSize == 5000 && r.paramMaxDelayTime == "10s")
+  }
+
   test("CLI parseArgs: bare flags don't shift the pairing of later args") {
     val got = Main.parseArgs(Seq("--test-id", "t1", "--no-resume",
       "--records", "5", "--explain", "--time", "7"))

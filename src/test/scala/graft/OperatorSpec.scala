@@ -85,4 +85,15 @@ class OperatorSpec extends SparkSpecBase {
       Seq("event_id", "user_id", "created_at", "user_name", "user_email"))
     assert(out.count() == 1000, "1000 generated, 100 dupes injected, all dropped")
   }
+
+  test("flagship entry equals the every-10th + global keep-first composition") {
+    // which rows are re-emitted (every 10th vs the first 100), and whether
+    // the keep-first is bucketed, must not change a single output row
+    val sent = DuplicateInjector.injectEveryK(
+      EventGenerator.generate(spark, 1000L, seed = 42L), col("row_id"), 10)
+    val inlined = MappingProjection(Dedup.keepFirst(sent, Seq("event_id"),
+      to_timestamp(col("created_at")), col("row_id")), FieldMapping.reference)
+    val entry = SparkEntry.entry(spark)
+    assert(entry.exceptAll(inlined).isEmpty && inlined.exceptAll(entry).isEmpty)
+  }
 }
