@@ -11,7 +11,7 @@ import graft.harness.Profiling
   * synchronization points" (job count high, task time ≪ wall). The bench
   * sweep's per-query medians say WHICH query is slow; this says WHY.
   *
-  * The session runs with the bench sweep's caches on, so it explains the
+  * The session caches are the ones the bench sweep uses, so it explains the
   * plans the sweep executes. Run 1 carries planning and codegen compile;
   * later runs are warm. Exec runs the forced executed plan over every
   * output column and counts rows on the executors; materialized blocks are
@@ -21,10 +21,6 @@ import graft.harness.Profiling
   * (`--plan` prints the last run's formatted plan, AQE-final).
   */
 object Explain {
-
-  /** The session caches the bench sweep switches on. */
-  private val SweepCaches: Seq[String] = Seq("graphEdgeCache", "shingleCache",
-    "groundTruthCache", "kmeansCache", "alignCache", "ivfCache", "lshBandsCache")
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) {
@@ -42,7 +38,6 @@ object Explain {
     val runs = args.lift(2).filterNot(_.startsWith("--")).map(_.toInt).getOrElse(3)
     val showPlan = args.contains("--plan")
     val spark = GraftSession.local("graft-explain")
-    SweepCaches.foreach(k => spark.conf.set(s"spark.graft.scale.$k", "1"))
     val prof = Profiling.attach(spark)
     // same JVM warm-up the bench applies, so run 1 ≈ the bench's cold run
     spark.range(1000).selectExpr("sum(id)").collect()

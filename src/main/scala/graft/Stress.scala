@@ -225,6 +225,9 @@ object Stress {
         // artifact must let a reader divide time growth by output growth
         val rs = (1 to runs).map { i =>
           if (i == runs) tally.reset() // metrics captured on the LAST run
+          // each execution pays its own session-table builds (pairs,
+          // shingles, k-means, ...): the ratios are per-query scaling costs
+          graft.queries.SessionCache.clear(spark)
           val t = once {
             outRows = SparkEntry.queries(name)(spark, dir).count()
           }

@@ -13,6 +13,12 @@ package graft.config
   * the short version: the fixed-K knobs (queryK, ivfK, codeK, kmK) bound
   * broadcast codebooks and map-side work — raising them changes constants,
   * never plan shapes, so the 100 TB plans are the sf0.01 plans.
+  *
+  * There is no cache knob: the session-shared tables (pair table,
+  * shingles, ground truth, k-means fit, aligned runs, IVF index, LSH
+  * bands) are always built once per session through
+  * [[graft.queries.SessionCache]], and each cache tag folds in every knob
+  * here that its build reads.
   */
 object Scale {
 
@@ -77,96 +83,4 @@ object Scale {
     * larger than this are stop-shingles, dropped before the pair join.
     */
   def maxDf: Int = get("maxDf", 1000)
-
-  /** Share one materialized near-dup pair table across its SEVENTEEN
-    * consumers — the graph pack (g01–g08) and the dedup consumers
-    * d03/d07/d08/d17/d18/d19/d21/d24/d32 — within a session ("1" = on;
-    * test-profile default off so every oracle-checked query stays
-    * self-contained). Each consumer starts from the same canonical
-    * MinHash+LSH banded pair join — at 100 TB a pipeline materializes
-    * that pair table ONCE; with the knob on, the first consumer writes
-    * the verified (i, j, jac) table to a session-scoped parquet location
-    * and the rest read it (results are bit-identical either way — the
-    * pair list is deterministic and doubles round-trip parquet exactly;
-    * see [[graft.queries.MaterializedPairs]]).
-    */
-  def graphEdgeCache: Boolean = get("graphEdgeCache", 0) == 1
-
-  /** Share one materialized per-doc shingle table — `(doc_id, lang,
-    * source, s3)`, the distinct hashed word-3-shingle arrays — across its
-    * SEVEN building consumers (d02, d12, d14, d23, d25, d27, d29 and the
-    * [[graphEdgeCache]] pair-table build itself) within a session
-    * ("1" = on; test-profile default off so every oracle-checked query
-    * stays self-contained). Tokenize+shingle-hash is one md5 per shingle —
-    * the dominant per-row cost of the dedup pack's corpus scan; at 100 TB
-    * the knob turns seven such scans into one
-    * (see [[graft.queries.MaterializedShingles]]; results are
-    * bit-identical either way — longs and long arrays round-trip parquet
-    * exactly, pinned by ScaleConfSpec).
-    */
-  def shingleCache: Boolean = get("shingleCache", 0) == 1
-
-  /** Share the recall harness's materialized inputs — the quantized
-    * vector base, the fixed [[queryK]] query sample, the exact
-    * full-dimension top-3 ground truth, and its 1-row totals — across
-    * the THREE recall-measuring queries (s05, s14, s16) within a session
-    * ("1" = on; test-profile default off so every oracle-checked query
-    * stays self-contained). The exact ground truth is an O(k·n) corpus
-    * scoring pass each query repeated per bench pass; at 100 TB a vector
-    * deployment computes it once and scores every ANN/truncation/
-    * projection arm against the same table (results are bit-identical
-    * either way — quantized longs, ids and IEEE doubles round-trip
-    * parquet exactly, pinned by ScaleConfSpec).
-    */
-  def groundTruthCache: Boolean = get("groundTruthCache", 0) == 1
-
-  /** Share one materialized k-means fit — the final Lloyd assignment
-    * `(vec_id, v, c_id, d2)` over the quantized embeddings — across its
-    * THREE consumers (s10 cell census, s11 cluster-balanced sample, d15
-    * SemDeDup) within a session ("1" = on; test-profile default off so
-    * every oracle-checked query stays self-contained). Each fit is
-    * kmIters corpus map passes plus per-pass driver codebook collects; at
-    * 100 TB the knob turns three fits into one (results are bit-identical
-    * either way — the fit is deterministic and longs/long-arrays
-    * round-trip parquet exactly, pinned by ScaleConfSpec; see
-    * [[graft.queries.MaterializedKMeans]]).
-    */
-  def kmeansCache: Boolean = get("kmeansCache", 0) == 1
-
-  /** Share one materialized aligned-run island table — the positional-
-    * gram candidate pipeline's `(i, j, diag, rl, pa0, pa1)` output —
-    * across its TWO consumers (d31 longest-run, d33 substring-eviction
-    * spans) within a session ("1" = on; test-profile default off so
-    * every oracle-checked query stays self-contained). The build (corpus
-    * positional-gram scan, df-cap, hash equi-join, gaps-and-islands) is
-    * both consumers' dominant cost; see
-    * [[graft.queries.MaterializedAlignedRuns]].
-    */
-  def alignCache: Boolean = get("alignCache", 0) == 1
-
-  /** Share the cosine IVF index — the '#ivf' codebook and the corpus
-    * cell assignment (vec_id, v, nrm, cell) — across its TWO consumers
-    * (s04 IVF search, s21 nprobe sweep) within a session ("1" = on;
-    * test-profile default off so every oracle-checked query stays
-    * self-contained). The assignment fold is each consumer's dominant
-    * corpus pass — and "build the index once, probe many" is exactly the
-    * deployed-IVF contract; see [[graft.queries.MaterializedIvfCells]].
-    */
-  def ivfCache: Boolean = get("ivfCache", 0) == 1
-
-  /** Share one materialized banded sign-LSH index — `(vec_id, v, nrm, bi,
-    * bv)`, every vector's quantized components, norm, and its
-    * [[graft.functions.VectorFunctions.LshBands]] (band, value) keys —
-    * across its FOUR consumers (s02 single-probe ANN, s06 multi-probe ANN,
-    * s05's two recall arms, d11 semantic dedup's candidate side) within a
-    * session ("1" = on; test-profile default off so every oracle-checked
-    * query stays self-contained). The signature computation is Bands ×
-    * planesFor(n) exact integer dot products per vector — the dominant
-    * per-row cost of every banded-LSH pipeline, and "hash the corpus once,
-    * probe it many times" is the deployed-LSH contract; see
-    * [[graft.queries.MaterializedLshBands]] (results are bit-identical
-    * either way — longs, long arrays and IEEE doubles round-trip parquet
-    * exactly, pinned by ScaleConfSpec).
-    */
-  def lshBandsCache: Boolean = get("lshBandsCache", 0) == 1
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -24,6 +25,11 @@ case class DotProductLong(left: Expression, right: Expression)
 
   override def dataType: DataType = LongType
   override def prettyName: String = "dot_long"
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val l = InputTypes.longArray(left)
+    if (l.isFailure) l else InputTypes.longArray(right, "second")
+  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]

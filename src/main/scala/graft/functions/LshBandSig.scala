@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -33,6 +34,8 @@ case class LshBandSig(child: Expression, bands: Int, planesPerBand: Int,
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "lsh_band_sig"
+
+  override def checkInputDataTypes(): TypeCheckResult = InputTypes.longArray(child)
 
   override def nullSafeEval(input: Any): Any =
     LshBandSig.compute(input.asInstanceOf[ArrayData], weights, bands,

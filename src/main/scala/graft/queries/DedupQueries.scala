@@ -86,20 +86,8 @@ object DedupQueries extends QueryPack {
     * when the result feeds a hash join.
     */
   private def d02PairsUnordered(s: SparkSession, dir: String, maxDf: Int): DataFrame =
-    // derived from the family's shared candidate table (one
-    // tokenize+shingle pass materialized per call knob-off, the whole
-    // pair build shared per session knob-on)
+    // derived from the family's session-shared candidate table
     withJac(overlapPairs(s, dir, maxDf))
-      .select(col("i"), col("j"), col("jac"))
-      .filter(col("jac") >= 0.3)
-
-  /** [[d02PairsUnordered]] from a caller-supplied `(doc_id, s3)` shingle
-    * table — the seam that shares the one tokenize+shingle pass (text
-    * scanning and shingle hashing is the per-row cost that doubles at
-    * 100 TB if each consumer rescans).
-    */
-  private def d02PairsFrom(sh: DataFrame, maxDf: Int): DataFrame =
-    withJac(overlapPairsFrom(sh, maxDf))
       .select(col("i"), col("j"), col("jac"))
       .filter(col("jac") >= 0.3)
 
@@ -121,19 +109,17 @@ object DedupQueries extends QueryPack {
     * predicate, so pre-filtering to the UNION keeps the materialized table
     * output-sized (the unfiltered candidate set — every pair sharing one
     * shingle — is the one intermediate you never want on disk at 100 TB).
-    * With [[graft.config.Scale.shingleCache]] on, the table is built once
-    * per (session, sfDir, maxDf) and d02, d23's truth set, and d25 all
-    * read it back: one explode + two shuffles for the family instead of
-    * three. The maxDf knob value is part of the cache tag — a mid-session
-    * conf change can never serve a stale cap.
+    * The table is built once per (session, sfDir, maxDf) and d02, d23's
+    * truth set, and d25 all read it back: one explode + two shuffles for
+    * the family instead of three. The maxDf knob value is part of the
+    * cache tag — a mid-session conf change can never serve a stale cap.
     */
-  private def overlapPairs(s: SparkSession, dir: String, maxDf: Int): DataFrame = {
-    def build = overlapPairsFrom(MaterializedShingles.s3(s, dir), maxDf)
-    if (!graft.config.Scale.shingleCache) build
-    else SessionCache.readThrough(s, dir, SessionCache.tag("ovp", maxDf))(build)
-  }
+  private[graft] def overlapPairs(s: SparkSession, dir: String, maxDf: Int): DataFrame =
+    SessionCache.readThrough(s, dir, SessionCache.tag("ovp", maxDf))(
+      overlapPairsFrom(MaterializedShingles.s3(s, dir), maxDf))
 
-  private def overlapPairsFrom(sh: DataFrame, maxDf: Int): DataFrame = {
+  /** [[overlapPairs]] computed directly from a `(doc_id, s3)` table. */
+  private[graft] def overlapPairsFrom(sh: DataFrame, maxDf: Int): DataFrame = {
     val ex = sh.select(col("doc_id"), explode(col("s3")).as("sng"))
     val sizes = sh.select(col("doc_id"), size(col("s3")).as("n"))
     // Group-pairs form, not a self-join: Spark doesn't reuse the exploded
@@ -443,24 +429,18 @@ object DedupQueries extends QueryPack {
     */
   private def d11(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions._
-    // Bucket width adapts to corpus size (planesFor: expected per-band
-    // occupancy ≤ TargetBucketSize at any n — never the O(n²/2^const) of a
-    // fixed plane count); LshBands independent bands keep recall. The SQL
-    // oracle pins the MinPlanes floor, which planesFor returns at every
-    // verify scale (see SimilarityQueries.SqlPlanes).
-    val p = planesFor(Tables.rowCount(s, dir, "embeddings"))
+    // Bucket width adapts to corpus size (MaterializedLshBands' planesFor:
+    // expected per-band occupancy ≤ TargetBucketSize at any n — never the
+    // O(n²/2^const) of a fixed plane count); LshBands independent bands
+    // keep recall. The SQL oracle pins the MinPlanes floor, which planesFor
+    // returns at every verify scale (see SimilarityQueries.SqlPlanes).
     val q = Tables.embeddings(s, dir)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(dotLong(col("v"), col("v")).cast("double")))
-    // candidate side: the session-materialized banded index under
-    // lshBandsCache (the identical lshBandVals frame s02/s05/s06 read,
-    // projected to the bucket keys), the self-contained build otherwise
-    val bands =
-      if (graft.config.Scale.lshBandsCache)
-        MaterializedLshBands.bands(s, dir)
-          .select(col("vec_id"), col("bi"), col("bv"))
-      else q.select(col("vec_id"),
-        posexplode(lshBandVals(col("v"), LshBands, p, 64)).as(Seq("bi", "bv")))
+    // candidate side: the session-materialized banded index (the identical
+    // lshBandVals frame s02/s05/s06 read), projected to the bucket keys
+    val bands = MaterializedLshBands.bands(s, dir)
+      .select(col("vec_id"), col("bi"), col("bv"))
     val cand = bands.as("a").join(bands.as("b"),
         col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&
         col("a.vec_id") < col("b.vec_id"))
@@ -613,11 +593,11 @@ object DedupQueries extends QueryPack {
     * used operationally) so every width is overflow-free and
     * engine-portable.
     *
-    * Scale shape: the corpus is tokenized+shingled ONCE (localCheckpoint'd
-    * `(doc_id, s3)` table shared by the truth set and the signatures — the
-    * per-row cost that would otherwise be paid twice); the truth set
-    * materializes ONCE (localCheckpoint, unsorted — it only feeds a hash
-    * join); all three arm widths explode
+    * Scale shape: the corpus is tokenized+shingled ONCE per session (the
+    * [[MaterializedShingles]] `(doc_id, s3)` table behind both the truth
+    * set and the signatures); the truth set is d02's session-shared pair
+    * table, materialized ONCE per run (localCheckpoint, unsorted — it only
+    * feeds a hash join); all three arm widths explode
     * from ONE signature scan into (r, bi, bv) band keys, so a single
     * self-equi-join on (r, bi, bv) generates every arm's candidates in one
     * shuffle — the d03 candidate plan at three widths, no cartesian
@@ -628,14 +608,10 @@ object DedupQueries extends QueryPack {
     */
   private def d23(s: SparkSession, dir: String): DataFrame = {
     val sh = MaterializedShingles.s3(s, dir)
-    // ONE tokenize+shingle pass feeds truth AND sigs. Knob off, the truth
-    // derives from THIS query's sh frame (no second scan); knob on it
-    // reads the session-shared overlap-pair table outright — the whole
-    // d02 pair build, not just the shingle scan, is then paid once per
-    // session across d02/d23/d25.
-    val truth = (if (graft.config.Scale.shingleCache)
-        d02PairsUnordered(s, dir, DefaultMaxDf)
-      else d02PairsFrom(sh, DefaultMaxDf))
+    // the truth reads the session-shared overlap-pair table outright — the
+    // whole d02 pair build, not just the shingle scan, is paid once per
+    // session across d02/d23/d25
+    val truth = d02PairsUnordered(s, dir, DefaultMaxDf)
       .select(col("i"), col("j")).localCheckpoint()
     val sig = MinHashLSH.signatures(sh, col("doc_id"), col("s3"), 8)
     val bandCols = BandSweepRs.flatMap { r =>
@@ -757,7 +733,7 @@ object DedupQueries extends QueryPack {
   private def d27(s: SparkSession, dir: String): DataFrame = {
     // referenced THREE times (posting-list explode + both verify-side
     // array joins): tokenize+shingle the corpus once, materialized
-    // (session-shared under Scale.shingleCache)
+    // (session-shared, MaterializedShingles)
     val sh = MaterializedShingles.s3(s, dir)
       .select(col("doc_id"), col("s3").as("sh"))
     val tok = sh.select(col("doc_id"), size(col("sh")).cast("long").as("len"),
@@ -1314,14 +1290,13 @@ object DedupQueries extends QueryPack {
     * partition on c_id; within-cell pair volume is bounded by the cell size,
     * which a production run holds constant by raising k with the corpus
     * (KMeans k is a plan-shape-free knob). The fit arrives materialized
-    * from [[graft.queries.MaterializedKMeans]] — shared with s10/s11 when
-    * the kmeansCache knob is on, self-contained (checkpointed) when off —
-    * so the two join sides never recompute it.
+    * from [[graft.queries.MaterializedKMeans]] — shared with s10/s11 — so
+    * the two join sides never recompute it.
     */
   private def d15(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions._
-    // the fit itself comes materialized (parquet-cached or checkpointed,
-    // see MaterializedKMeans) — only the cheap per-row norm recomputes on
+    // the fit itself comes materialized (parquet-cached, see
+    // MaterializedKMeans) — only the cheap per-row norm recomputes on
     // each side of the self-join
     val cells = MaterializedKMeans.cells(s, dir)
       .withColumn("nrm", sqrt(dotLong(col("v"), col("v")).cast("double")))
@@ -1865,7 +1840,7 @@ object DedupQueries extends QueryPack {
   private def d31(s: SparkSession, dir: String): DataFrame = {
     // the candidate pipeline (positional grams → df-cap → equi-join →
     // gaps-and-islands) comes from MaterializedAlignedRuns — shared with
-    // d33 when the alignCache knob is on, self-contained when off
+    // d33
     MaterializedAlignedRuns.islands(s, dir)
       .groupBy(col("i"), col("j"))
       .agg(max(col("rl")).as("run_grams"))

@@ -24,9 +24,8 @@ object GraphQueries extends QueryPack {
   private val PrIters = 3
 
   /** Ordered near-dup pairs (i < j) — the MinHash+LSH banded-join product
-    * every g-query starts from, shared (and, under the
-    * [[graft.config.Scale.graphEdgeCache]] knob, materialized once per
-    * session) with the dedup pack through [[MaterializedPairs]].
+    * every g-query starts from, materialized once per session and shared
+    * with the dedup pack through [[MaterializedPairs]].
     */
   private def nearDupPairs(s: SparkSession, dir: String): DataFrame =
     MaterializedPairs.nearDup(s, dir).select(col("i"), col("j"))
@@ -114,7 +113,7 @@ object GraphQueries extends QueryPack {
     * own neighborhood.
     */
   private def g02(s: SparkSession, dir: String): DataFrame = {
-    val pairs = MaterializedPairs.nearDupPinned(s, dir).select(col("i"), col("j"))
+    val pairs = nearDupPairs(s, dir)
     val tri = pairs.as("e1")
       .join(pairs.as("e2"), col("e2.i") === col("e1.j"))
       .join(pairs.as("e3"),
@@ -161,7 +160,7 @@ object GraphQueries extends QueryPack {
     * degrees on the node key. No node ever sees beyond its neighborhood.
     */
   private def g03(s: SparkSession, dir: String): DataFrame = {
-    val pairs = MaterializedPairs.nearDupPinned(s, dir).select(col("i"), col("j"))
+    val pairs = nearDupPairs(s, dir)
     val tris = pairs.as("e1")
       .join(pairs.as("e2"), col("e2.i") === col("e1.j"))
       .join(pairs.as("e3"),
@@ -216,7 +215,7 @@ object GraphQueries extends QueryPack {
     * a component-keyed join. No step widens beyond the edge list.
     */
   private def g04(s: SparkSession, dir: String): DataFrame = {
-    val pairs = MaterializedPairs.nearDupPinned(s, dir).select(col("i"), col("j"))
+    val pairs = nearDupPairs(s, dir)
     val comp = ConnectedComponents.components(pairs)
     val sizes = comp.groupBy(col("component"))
       .agg(count(lit(1)).as("n_nodes"))
@@ -373,7 +372,7 @@ object GraphQueries extends QueryPack {
     */
   private def g07(s: SparkSession, dir: String): DataFrame = {
     val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-    val pairs = MaterializedPairs.nearDupPinned(s, dir).select(col("i"), col("j"))
+    val pairs = nearDupPairs(s, dir)
     val m = pairs.count() // one scalar: total undirected edges
     val withSrc = pairs
       .join(src.withColumnRenamed("doc_id", "i")

@@ -17,51 +17,47 @@ import graft.functions.TextFunctions
   *
   * The build is the family's full candidate pipeline (positional-gram
   * corpus scan → occurrence df-cap → hash equi-join → per-(i, j, diag)
-  * gaps-and-islands) — the dominant cost of both consumers. With
-  * [[graft.config.Scale.alignCache]] on (the bench/pipeline profile), the
-  * first consumer writes the island table to the session-scoped parquet
-  * location and the other reads it back — ONE candidate pipeline per
-  * sweep instead of two. Off (the test-profile default), each consumer
-  * builds its own and stays fully self-contained against its DuckDB
-  * oracle (no checkpoint: each consumes the frame exactly once). Results
-  * are bit-identical either way — longs round-trip parquet exactly;
-  * ScaleConfSpec pins cached == uncached on both consumers.
+  * gaps-and-islands) — the dominant cost of both consumers. The first
+  * consumer writes the island table to the session-scoped parquet location
+  * and the other reads it back — ONE candidate pipeline per sweep instead
+  * of two. Longs round-trip parquet exactly; ScaleConfSpec pins the
+  * read-through table equal to its direct [[build]].
   */
 object MaterializedAlignedRuns {
 
   /** The island table at the family's fixed shape (3-grams, df cap from
     * [[graft.config.Scale.maxDf]] — folded into the cache tag).
     */
-  def islands(s: SparkSession, dir: String): DataFrame = {
+  def islands(s: SparkSession, dir: String): DataFrame =
+    SessionCache.readThrough(s, dir,
+      SessionCache.tag("alignruns", graft.config.Scale.maxDf))(build(s, dir))
+
+  /** The island table computed directly, bypassing the cache. */
+  private[graft] def build(s: SparkSession, dir: String): DataFrame = {
     val maxDf = graft.config.Scale.maxDf
-    def build = {
-      val pg = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          posexplode(graft.functions.PositionalShingleHashes(
-            TextFunctions.tokens(col("text")), 3)).as(Seq("p0", "h")))
-        .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
-          col("h"))
-        .localCheckpoint() // occurrence filter + both self-join sides
-      val keep = pg.groupBy(col("h"))
-        .agg(count(lit(1)).as("occ"))
-        .filter(col("occ").between(2, maxDf))
-        .select(col("h"))
-      val cap = pg.join(keep, "h")
-      val rw = Window.partitionBy(col("i"), col("j"), col("diag"))
-        .orderBy(col("pa"))
-      cap.as("a").join(cap.as("b"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"),
-          col("a.pos").as("pa"), (col("a.pos") - col("b.pos")).as("diag"))
-        .withColumn("grp", col("pa") - row_number().over(rw))
-        .groupBy(col("i"), col("j"), col("diag"), col("grp"))
-        .agg(count(lit(1)).as("rl"), min(col("pa")).as("pa0"),
-          max(col("pa")).as("pa1"))
-        .select(col("i"), col("j"), col("diag"), col("rl"), col("pa0"),
-          col("pa1"))
-    }
-    if (!graft.config.Scale.alignCache) build
-    else SessionCache.readThrough(s, dir,
-      SessionCache.tag("alignruns", maxDf))(build)
+    val pg = Tables.documents(s, dir)
+      .select(col("doc_id"),
+        posexplode(graft.functions.PositionalShingleHashes(
+          TextFunctions.tokens(col("text")), 3)).as(Seq("p0", "h")))
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
+        col("h"))
+      .localCheckpoint() // occurrence filter + both self-join sides
+    val keep = pg.groupBy(col("h"))
+      .agg(count(lit(1)).as("occ"))
+      .filter(col("occ").between(2, maxDf))
+      .select(col("h"))
+    val cap = pg.join(keep, "h")
+    val rw = Window.partitionBy(col("i"), col("j"), col("diag"))
+      .orderBy(col("pa"))
+    cap.as("a").join(cap.as("b"),
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"),
+        col("a.pos").as("pa"), (col("a.pos") - col("b.pos")).as("diag"))
+      .withColumn("grp", col("pa") - row_number().over(rw))
+      .groupBy(col("i"), col("j"), col("diag"), col("grp"))
+      .agg(count(lit(1)).as("rl"), min(col("pa")).as("pa0"),
+        max(col("pa")).as("pa1"))
+      .select(col("i"), col("j"), col("diag"), col("rl"), col("pa0"),
+        col("pa1"))
   }
 }

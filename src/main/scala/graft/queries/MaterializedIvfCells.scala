@@ -9,17 +9,14 @@ import org.apache.spark.sql.functions._
   * and which IS the "build the index once, probe it many times" contract
   * a deployed IVF store runs (the assignment is the index).
   *
-  * With [[graft.config.Scale.ivfCache]] on (the bench/pipeline profile),
-  * the first consumer writes the assignment (and the exploded codebook
+  * The first consumer writes the assignment (and the exploded codebook
   * rows) to the session-scoped parquet location and the other reads them
-  * back — ONE corpus assignment fold per sweep instead of two. Off (the
-  * test-profile default), each consumer builds its own from
-  * `SimilarityQueries.ivfAssign` and stays fully self-contained against
-  * its DuckDB oracle. Results are bit-identical either way: quantized
+  * back — ONE corpus assignment fold per sweep instead of two. Quantized
   * longs and IEEE doubles round-trip parquet exactly, and the codebook's
   * one-row candidate array is rebuilt with the same c_id-keyed sort_array
-  * (c_id is the struct's unique leading field); ScaleConfSpec pins
-  * cached == uncached on both consumers. IvfK is folded into the tags.
+  * (c_id is the struct's unique leading field); ScaleConfSpec pins both
+  * read-through tables equal to their direct builds. IvfK is folded into
+  * the tags.
   */
 object MaterializedIvfCells {
 
@@ -35,35 +32,28 @@ object MaterializedIvfCells {
     * deterministic sort_array.
     */
   def codebook(s: SparkSession, dir: String): DataFrame = {
-    val k = graft.config.Scale.ivfK
-    if (!graft.config.Scale.ivfCache)
-      SimilarityQueries.ivfCodebook(base(s, dir))
-    else {
-      val rows = SessionCache.readThrough(s, dir,
-        SessionCache.tag("ivfcents", k)) {
-        SimilarityQueries.ivfCodebook(base(s, dir))
-          .select(explode(col("cands")).as("c"))
-          .select(col("c.c_id"), col("c.c_v"), col("c.c_nrm"))
-      }
-      rows.agg(sort_array(collect_list(struct(col("c_id"),
-        col("c_v"), col("c_nrm")))).as("cands"))
+    val rows = SessionCache.readThrough(s, dir,
+      SessionCache.tag("ivfcents", graft.config.Scale.ivfK)) {
+      buildCodebook(s, dir)
+        .select(explode(col("cands")).as("c"))
+        .select(col("c.c_id"), col("c.c_v"), col("c.c_nrm"))
     }
+    rows.agg(sort_array(collect_list(struct(col("c_id"),
+      col("c_v"), col("c_nrm")))).as("cands"))
   }
 
   /** The corpus-wide cell assignment `(vec_id, v, nrm, cell)`. */
   def assigned(s: SparkSession, dir: String): DataFrame =
-    assigned(s, dir, codebook(s, dir))
+    SessionCache.readThrough(s, dir,
+      SessionCache.tag("ivfcells", graft.config.Scale.ivfK))(
+      buildAssigned(s, dir, codebook(s, dir)))
 
-  /** [[assigned]] with the codebook supplied, so a consumer that already
-    * holds [[codebook]]'s frame (s04/s21 probe both sides) feeds ONE
-    * codebook build into the assignment instead of constructing the
-    * codebook pipeline twice in the cache-off profile (round-16 ADVICE).
-    */
-  def assigned(s: SparkSession, dir: String, cents: DataFrame): DataFrame = {
-    val k = graft.config.Scale.ivfK
-    def build = SimilarityQueries.ivfAssign(base(s, dir), cents)
-    if (!graft.config.Scale.ivfCache) build
-    else SessionCache.readThrough(s, dir,
-      SessionCache.tag("ivfcells", k))(build)
-  }
+  /** The codebook computed directly, bypassing the cache. */
+  private[graft] def buildCodebook(s: SparkSession, dir: String): DataFrame =
+    SimilarityQueries.ivfCodebook(base(s, dir))
+
+  /** The assignment against codebook `cents`, bypassing the cache. */
+  private[graft] def buildAssigned(s: SparkSession, dir: String,
+                                   cents: DataFrame): DataFrame =
+    SimilarityQueries.ivfAssign(base(s, dir), cents)
 }

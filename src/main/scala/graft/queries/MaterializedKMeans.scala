@@ -14,18 +14,13 @@ import graft.functions.VectorFunctions.quantize
   * Each consumer previously ran its own KmIters-pass Lloyd fit over the
   * same corpus with identical knobs (r15 VERDICT task 2: s10/s11/d15 were
   * three of the sweep's most expensive queries, each paying T corpus scans
-  * plus T driver codebook materializations). With
-  * [[graft.config.Scale.kmeansCache]] on (the bench/pipeline profile), the
-  * first consumer in a session writes the assignment to a session-scoped
-  * parquet location and the rest read it back — at 100 TB that is ONE
-  * k-means fit per pipeline instead of three. Off (the test-profile
-  * default), every consumer fits its own (localCheckpoint'd — d15
-  * self-joins the result, and the fit's driver-side codebook collects
-  * should never re-run lazily) and stays fully self-contained against its
-  * DuckDB oracle. Results are bit-identical either way: the fit is
-  * deterministic (lowest-k-by-md5 seeds, exact integer arithmetic — see
-  * [[graft.operators.KMeans]]) and longs/long-arrays round-trip parquet
-  * exactly; ScaleConfSpec pins cached == uncached on all three consumers.
+  * plus T driver codebook materializations). The first consumer in a
+  * session writes the assignment to a session-scoped parquet location and
+  * the rest read it back — at 100 TB that is ONE k-means fit per pipeline
+  * instead of three. The fit is deterministic (lowest-k-by-md5 seeds,
+  * exact integer arithmetic — see [[graft.operators.KMeans]]) and
+  * longs/long-arrays round-trip parquet exactly; ScaleConfSpec pins the
+  * read-through table equal to its direct [[build]].
   *
   * The tag folds in every knob the build reads (kmK, kmIters; Dims and the
   * quantization scale are compile-time constants of the embeddings table),
@@ -38,16 +33,15 @@ object MaterializedKMeans {
     Tables.embeddings(s, dir)
       .select(col("vec_id"), quantize(col("embedding")).as("v"))
 
+  /** The fit computed directly, bypassing the cache. */
+  private[graft] def build(s: SparkSession, dir: String): DataFrame =
+    graft.operators.KMeans.cluster(vecs(s, dir).localCheckpoint(), dims = 64,
+      k = graft.config.Scale.kmK, iters = graft.config.Scale.kmIters)
+
   /** The final k-means assignment `(vec_id, v, c_id, d2)`, materialized
-    * once per (session, sfDir, kmK, kmIters) when the knob is on;
-    * localCheckpoint'd per call when off.
+    * once per (session, sfDir, kmK, kmIters).
     */
-  def cells(s: SparkSession, dir: String): DataFrame = {
-    val (k, iters) = (graft.config.Scale.kmK, graft.config.Scale.kmIters)
-    def build = graft.operators.KMeans.cluster(
-      vecs(s, dir).localCheckpoint(), dims = 64, k = k, iters = iters)
-    if (!graft.config.Scale.kmeansCache) build.localCheckpoint()
-    else SessionCache.readThrough(s, dir,
-      SessionCache.tag("kmcells", k, iters))(build)
-  }
+  def cells(s: SparkSession, dir: String): DataFrame =
+    SessionCache.readThrough(s, dir, SessionCache.tag("kmcells",
+      graft.config.Scale.kmK, graft.config.Scale.kmIters))(build(s, dir))
 }

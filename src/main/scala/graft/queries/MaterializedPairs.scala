@@ -12,44 +12,30 @@ import graft.operators.MinHashLSH
   * [[GraphQueries]]) and the dedup consumers d03/d07/d08/d17/d18/d19/
   * d21/d24/d32.
   *
-  * With [[graft.config.Scale.graphEdgeCache]] on (the bench/pipeline
-  * profile), the first consumer in a session writes the full pair table to
-  * a session-scoped parquet location and every later consumer — graph or
+  * The first consumer in a session writes the full pair table to a
+  * session-scoped parquet location and every later consumer — graph or
   * dedup — reads it back: at 100 TB that is ONE corpus scan + banded join
-  * for the whole downstream pack instead of seventeen. Off (the test-profile
-  * default), every query builds its own pairs and stays fully
-  * self-contained against its DuckDB oracle; ScaleConfSpec pins
-  * cached == uncached bit-identical on both a graph and a dedup consumer
-  * (the jac doubles round-trip parquet exactly).
+  * for the whole downstream pack instead of seventeen. ScaleConfSpec pins
+  * the read-through table equal to its direct [[build]] (the jac doubles
+  * round-trip parquet exactly).
   *
-  * The build starts from [[MaterializedShingles]], so with BOTH knobs on
-  * the whole seventeen-consumer pack costs one tokenize+shingle corpus
-  * scan AND one banded join per session; cache mechanics (session-instance
-  * UUID keys, shared driver+executor path, exit sweep, memoized build
-  * holder) live in [[SessionCache]].
+  * The build starts from [[MaterializedShingles]], so the whole
+  * seventeen-consumer pack costs one tokenize+shingle corpus scan AND one
+  * banded join per session; cache mechanics (session-instance UUID keys,
+  * shared driver+executor path, exit sweep, memoized build holder) live in
+  * [[SessionCache]].
   */
 object MaterializedPairs {
 
-  /** The canonical verified near-dup pair table (i < j, exact jac ≥ 0.3),
-    * materialized once per (session, sfDir) when the knob is on.
-    */
-  def nearDup(s: SparkSession, dir: String): DataFrame = {
-    def build = MinHashLSH.nearDuplicatesFrom(
+  /** The pair table computed directly, bypassing the cache. */
+  private[graft] def build(s: SparkSession, dir: String): DataFrame =
+    MinHashLSH.nearDuplicatesFrom(
       MaterializedShingles.s3(s, dir).select(col("doc_id"), col("s3")),
       col("s3"), k = 8, r = 2, threshold = 0.3)
-    if (!graft.config.Scale.graphEdgeCache) build
-    else SessionCache.readThrough(s, dir, "pairs")(build)
-  }
 
-  /** [[nearDup]] pinned for multi-reference consumers: when the cache knob
-    * is on the table is parquet-backed and re-scanning it per reference is
-    * cheaper than an extra localCheckpoint job per query (round-18: each
-    * checkpoint of the tiny pair table cost one more scheduled job in every
-    * graph query); when off, localCheckpoint so the full MinHash build never
-    * runs once per reference.
+  /** The canonical verified near-dup pair table (i < j, exact jac ≥ 0.3),
+    * materialized once per (session, sfDir).
     */
-  def nearDupPinned(s: SparkSession, dir: String): DataFrame = {
-    val df = nearDup(s, dir)
-    if (graft.config.Scale.graphEdgeCache) df else df.localCheckpoint()
-  }
+  def nearDup(s: SparkSession, dir: String): DataFrame =
+    SessionCache.readThrough(s, dir, "pairs")(build(s, dir))
 }

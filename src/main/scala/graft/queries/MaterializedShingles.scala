@@ -15,17 +15,13 @@ import graft.functions.{ShingleHashes, TextFunctions}
   * downstream consumers).
   *
   * Tokenize + shingle-hash is the per-row cost that dominates these
-  * queries' corpus scan (one md5 per shingle); with
-  * [[graft.config.Scale.shingleCache]] on (the bench/pipeline profile),
-  * the first consumer in a session writes the table to a session-scoped
-  * parquet location and every later consumer reads it back — at 100 TB
-  * that is ONE tokenize+shingle scan of the corpus for the whole dedup
-  * pack instead of seven. Off (the test-profile default), every consumer
-  * builds its own table (localCheckpoint'd, since each references it 2–3
-  * times within its own plan) and stays fully self-contained against its
-  * DuckDB oracle; ScaleConfSpec pins cached == uncached bit-identical on
-  * d02/d23/d27/d29 (longs and arrays of longs round-trip parquet exactly,
-  * and parquet preserves array element order).
+  * queries' corpus scan (one md5 per shingle); the first consumer in a
+  * session writes the table to a session-scoped parquet location and every
+  * later consumer reads it back — at 100 TB that is ONE tokenize+shingle
+  * scan of the corpus for the whole dedup pack instead of seven.
+  * ScaleConfSpec pins the read-through table equal to its direct [[build]]
+  * (longs and arrays of longs round-trip parquet exactly, and parquet
+  * preserves array element order).
   *
   * NOT covered, deliberately: d09/d20/d22 (5-gram shingles — different n,
   * one consumer each), d26 (winnowing selects window-minima over
@@ -36,15 +32,15 @@ import graft.functions.{ShingleHashes, TextFunctions}
   */
 object MaterializedShingles {
 
-  /** The canonical distinct-3-shingle table, materialized once per
-    * (session, sfDir) when the knob is on; localCheckpoint'd per call
-    * when off (every consumer references it at least twice).
-    */
-  def s3(s: SparkSession, dir: String): DataFrame = {
-    def build = Tables.documents(s, dir)
+  /** The shingle table computed directly, bypassing the cache. */
+  private[graft] def build(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"), col("source"),
         ShingleHashes(TextFunctions.tokens(col("text")), 3).as("s3"))
-    if (!graft.config.Scale.shingleCache) build.localCheckpoint()
-    else SessionCache.readThrough(s, dir, "sh3")(build)
-  }
+
+  /** The canonical distinct-3-shingle table, materialized once per
+    * (session, sfDir).
+    */
+  def s3(s: SparkSession, dir: String): DataFrame =
+    SessionCache.readThrough(s, dir, "sh3")(build(s, dir))
 }

@@ -2,9 +2,14 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped parquet read-through cache — the shared machinery behind
-  * [[MaterializedPairs]] (the near-dup pair table) and
-  * [[MaterializedShingles]] (the per-doc shingle table).
+/** Session-scoped parquet read-through cache — the one way graft builds
+  * its session-shared derived tables: the near-dup pair table
+  * ([[MaterializedPairs]]), the per-doc shingles ([[MaterializedShingles]])
+  * and d02's overlap pairs, the recall harness's ground truth, the k-means
+  * fit ([[MaterializedKMeans]]), the aligned runs
+  * ([[MaterializedAlignedRuns]]), the IVF index ([[MaterializedIvfCells]])
+  * and the LSH bands ([[MaterializedLshBands]]). It is always on: Verify,
+  * the tests, Bench, Explain and graftbench all run the same path.
   *
   * The cache memoizes each built table's PARQUET PATH plus its resolved
   * DataFrame (round 18 — metadata only: schema + file index; execution
@@ -14,9 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (never an identity hash: those are non-unique across live sessions and
   * reusable after GC, which could serve a stale table built under a
   * different conf), the location is shared between driver and executors
-  * (`spark.graft.scale.sessionCachePath`, legacy `graphEdgeCachePath`,
-  * else warehouse-relative), and every root written this JVM is swept on
-  * exit.
+  * (`spark.graft.scale.sessionCachePath`, else warehouse-relative), and
+  * every root written this JVM is swept on exit.
   *
   * Concurrency: the map holds MEMOIZED THUNKS, not eagerly-built paths.
   * `computeIfAbsent` only constructs the lazy holder — O(1) under the
@@ -27,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DIFFERENT key that happens to share the hash bin is never blocked for
   * the duration of a Spark job (round-11 advice item).
   */
-private[queries] object SessionCache {
+private[graft] object SessionCache {
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     (String, String, String), () => DataFrame]
@@ -60,8 +64,8 @@ private[queries] object SessionCache {
   private def sessionId(s: SparkSession): String =
     sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
 
-  /** Where cached tables live: `spark.graft.scale.sessionCachePath` (or the
-    * pre-round-12 name `graphEdgeCachePath`) if set, else warehouse-relative
+  /** Where cached tables live: `spark.graft.scale.sessionCachePath` if
+    * set, else warehouse-relative
     * (`spark.sql.warehouse.dir`) — a location SHARED between driver and
     * executors on a real cluster. A `createTempDirectory` driver-local path
     * would only work when driver and executors share a filesystem (local
@@ -69,9 +73,8 @@ private[queries] object SessionCache {
     * writing/reading a non-shared local path would fail or silently produce
     * partial reads.
     */
-  private def cacheRoot(s: SparkSession): String = {
+  private[graft] def cacheRoot(s: SparkSession): String = {
     val base = s.conf.getOption("spark.graft.scale.sessionCachePath")
-      .orElse(s.conf.getOption("spark.graft.scale.graphEdgeCachePath"))
       .getOrElse(s.conf.get("spark.sql.warehouse.dir"))
     s"${base.stripSuffix("/")}/graft_cache/${sessionId(s)}"
   }
@@ -121,5 +124,22 @@ private[queries] object SessionCache {
       () => df
     })
     holder()
+  }
+
+  /** Forget every table cached for `s` and delete its cache root. The
+    * session then mints a new id, so the next consumer rebuilds into a
+    * fresh root; a frame still holding the old files fails loudly on its
+    * next scan. Stress calls this before each timed execution so every
+    * query is charged its own builds.
+    */
+  private[graft] def clear(s: SparkSession): Unit = {
+    val id = sessionId(s)
+    val root = cacheRoot(s)
+    cache.keySet.removeIf(_._1 == id)
+    sessionIds.remove(s)
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // a root whose delete fails or throws stays registered for the exit sweep
+    if (fs.delete(p, true) || !fs.exists(p)) cacheRoots.remove(root)
   }
 }

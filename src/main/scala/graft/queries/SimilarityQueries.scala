@@ -74,9 +74,9 @@ object SimilarityQueries extends QueryPack {
 
   /** The shared vector base every similarity pipeline starts from: quantized
     * components + precomputed norm. Each standalone query builds its own;
-    * s05 materializes it ONCE (localCheckpoint) and feeds all four pipelines
-    * from it — at 100 TB that is the difference between one corpus scan and
-    * four.
+    * s05/s14/s16 read it ONCE per session ([[recallBase]]) and feed every
+    * pipeline from it — at 100 TB that is the difference between one corpus
+    * scan and four.
     */
   private def baseVecs(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
@@ -144,26 +144,6 @@ object SimilarityQueries extends QueryPack {
     * · TargetBucketSize candidate rows. Scoring before the distinct is safe:
     * a pair colliding in several bands produces bit-identical cos values.
     */
-  /** The banded corpus frame [[lshPairsFromBands]] consumes — split out so
-    * a harness running BOTH probe variants over the same corpus (s05) can
-    * compute the Bands×p hyperplane signatures once and feed the two arms
-    * from one materialized frame: at 100 TB that is one index-build pass
-    * instead of two.
-    */
-  private def lshBands(base: DataFrame, p: Int): DataFrame =
-    base.select(col("vec_id"), col("v"), col("nrm"),
-      posexplode(lshBandVals(col("v"), Bands, p, Dims)).as(Seq("bi", "bv")))
-
-  /** The banded corpus frame for a standalone probe query: the session-
-    * materialized index under [[graft.config.Scale.lshBandsCache]] (one
-    * signature pass per session — the deployed-LSH "hash once, probe many"
-    * contract), the self-contained build otherwise. Bit-identical either
-    * way (ScaleConfSpec).
-    */
-  private def bandsFor(s: SparkSession, dir: String, p: Int): DataFrame =
-    if (graft.config.Scale.lshBandsCache) MaterializedLshBands.bands(s, dir)
-    else lshBands(baseVecs(s, dir), p)
-
   private def lshPairsFromBands(bands: DataFrame, ids: DataFrame, p: Int,
                                 multiProbe: Boolean): DataFrame = {
     val own = bands.join(broadcast(ids), "vec_id")
@@ -198,8 +178,8 @@ object SimilarityQueries extends QueryPack {
     */
   private def s02(s: SparkSession, dir: String): DataFrame = {
     val p = planesFor(Tables.rowCount(s, dir, "embeddings"))
-    topkRank(lshPairsFromBands(bandsFor(s, dir, p), sampleIds(s, dir, QueryK),
-      p, multiProbe = false), 3)
+    topkRank(lshPairsFromBands(MaterializedLshBands.bands(s, dir),
+      sampleIds(s, dir, QueryK), p, multiProbe = false), 3)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -319,15 +299,8 @@ object SimilarityQueries extends QueryPack {
         }))
       .select(col("vec_id"), col("v"), col("nrm"), col("best.cell").as("cell"))
 
-  private def s04From(q: DataFrame, ids: DataFrame): DataFrame = {
-    val cents = ivfCodebook(q)
-    s04From(q, ids, ivfAssign(q, cents), cents)
-  }
-
-  /** [[s04From]] with the corpus-side frames supplied — the shape s04
-    * itself runs (assignment and codebook from [[MaterializedIvfCells]],
-    * shared with s21); s05 keeps the (q, ids) form so its recall harness
-    * stays self-contained on its own materialized base.
+  /** IVF search over the corpus-side frames [[MaterializedIvfCells]]
+    * shares between s04, s05's IVF arm and s21.
     */
   private def s04From(q: DataFrame, ids: DataFrame, withCell: DataFrame,
                       cents: DataFrame): DataFrame = {
@@ -356,9 +329,9 @@ object SimilarityQueries extends QueryPack {
   }
 
   private def s04(s: SparkSession, dir: String): DataFrame = {
-    val cents = MaterializedIvfCells.codebook(s, dir)
     s04From(baseVecs(s, dir), sampleIds(s, dir, QueryK),
-      MaterializedIvfCells.assigned(s, dir, cents), cents)
+      MaterializedIvfCells.assigned(s, dir),
+      MaterializedIvfCells.codebook(s, dir))
   }
 
   private def s04Sql: String =
@@ -403,8 +376,8 @@ object SimilarityQueries extends QueryPack {
     */
   private def s06(s: SparkSession, dir: String): DataFrame = {
     val p = planesFor(Tables.rowCount(s, dir, "embeddings"))
-    topkRank(lshPairsFromBands(bandsFor(s, dir, p), sampleIds(s, dir, QueryK),
-      p, multiProbe = true), 3)
+    topkRank(lshPairsFromBands(MaterializedLshBands.bands(s, dir),
+      sampleIds(s, dir, QueryK), p, multiProbe = true), 3)
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -444,42 +417,43 @@ object SimilarityQueries extends QueryPack {
   /** The recall harness's shared inputs — quantized base vectors, the
     * fixed QueryK query sample, the exact full-dimension top-3 ground
     * truth, and its 1-row (n_queries, n_possible) totals — identical in
-    * s05, s14 and s16. Default: per-query localCheckpoints (each
-    * oracle-checked query self-contained). Under
-    * `spark.graft.scale.groundTruthCache` the four tables read through
-    * the session parquet cache instead, so separated bench passes and
-    * the three consumers share ONE O(k·n) exact scoring pass — the shape
-    * a 100 TB vector deployment uses (ground truth computed once, every
-    * ANN/truncation/projection arm scored against the same table).
-    * QueryK is folded into every cache tag (the SessionCache invariant:
-    * a knob the build reads must key the cache).
+    * s05, s14 and s16. The four tables read through the session parquet
+    * cache, so separated bench passes and the three consumers share ONE
+    * O(k·n) exact scoring pass — the shape a 100 TB vector deployment uses
+    * (ground truth computed once, every ANN/truncation/projection arm
+    * scored against the same table). QueryK is folded into every cache tag
+    * (the SessionCache invariant: a knob the build reads must key the
+    * cache).
     */
-  private def recallBase(s: SparkSession, dir: String)
+  private[graft] def recallBase(s: SparkSession, dir: String)
     : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    def exactFrom(vecs: DataFrame, ids: DataFrame) =
-      s01From(vecs, ids).filter(col("rk") <= 3)
-        .select(col("query_id"), col("neighbor_id"))
-    def baseFrom(exact: DataFrame) =
-      exact.agg(countDistinct(col("query_id")).as("n_queries"),
-        count(lit(1)).as("n_possible"))
-    if (!graft.config.Scale.groundTruthCache) {
-      val vecs = baseVecs(s, dir).localCheckpoint()
-      val ids = sampleIds(s, dir, QueryK).localCheckpoint()
-      val exact = exactFrom(vecs, ids).localCheckpoint()
-      (vecs, ids, exact, baseFrom(exact).localCheckpoint())
-    } else {
-      val k = QueryK
-      val vecs = SessionCache.readThrough(s, dir,
-        SessionCache.tag("rbvecs", k))(baseVecs(s, dir))
-      val ids = SessionCache.readThrough(s, dir,
-        SessionCache.tag("rbids", k))(sampleIds(s, dir, k))
-      val exact = SessionCache.readThrough(s, dir,
-        SessionCache.tag("rbexact", k))(exactFrom(vecs, ids))
-      val base = SessionCache.readThrough(s, dir,
-        SessionCache.tag("rbbase", k))(baseFrom(exact))
-      (vecs, ids, exact, base)
-    }
+    val k = QueryK
+    def cached(name: String)(build: => DataFrame): DataFrame =
+      SessionCache.readThrough(s, dir, SessionCache.tag(name, k))(build)
+    val vecs = cached("rbvecs")(baseVecs(s, dir))
+    val ids = cached("rbids")(sampleIds(s, dir, k))
+    val exact = cached("rbexact")(recallExact(vecs, ids))
+    (vecs, ids, exact, cached("rbbase")(recallTotals(exact)))
   }
+
+  /** [[recallBase]]'s four tables computed directly, bypassing the cache. */
+  private[graft] def recallBuild(s: SparkSession, dir: String)
+    : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val vecs = baseVecs(s, dir)
+    val ids = sampleIds(s, dir, QueryK)
+    val exact = recallExact(vecs, ids)
+    (vecs, ids, exact, recallTotals(exact))
+  }
+
+  /** The exact top-3 ground truth of `ids` over `vecs`. */
+  private def recallExact(vecs: DataFrame, ids: DataFrame): DataFrame =
+    s01From(vecs, ids).filter(col("rk") <= 3)
+      .select(col("query_id"), col("neighbor_id"))
+
+  /** The 1-row (n_queries, n_possible) totals of a ground-truth table. */
+  private def recallTotals(exact: DataFrame): DataFrame =
+    exact.agg(countDistinct(col("query_id")).as("n_queries"),
+      count(lit(1)).as("n_possible"))
 
   private def recallStats(exact: DataFrame, base: DataFrame,
       ann: DataFrame, name: String): DataFrame = {
@@ -501,42 +475,29 @@ object SimilarityQueries extends QueryPack {
     * deployment tunes probes/cells against. Hit counting is exact set
     * intersection per query; one integer-ratio row per method.
     *
-    * Plan reuse (the round-2 verdict's top item): the quantized vector base
-    * and the query-id sample are `localCheckpoint`ed ONCE and every pipeline
-    * — exact ground truth and all three ANN methods — derives from those
-    * materialized frames, so the corpus is scanned/quantized once, not four
-    * times. The ground truth is additionally checkpointed (it is referenced
-    * by every per-method join — lazy plans would re-execute it 6×), the
-    * (n_queries, n_possible) base aggregate is computed once and cross-joined
-    * (1 row) into each method's stats, and the banded LSH index is built
-    * ONCE and shared by the single-probe and multi-probe arms ([[lshBands]]).
-    * The only remaining executions are the four measurements themselves,
-    * each exactly once.
+    * Plan reuse (the round-2 verdict's top item): the quantized vector base,
+    * the query-id sample, the ground truth and its (n_queries, n_possible)
+    * totals come from [[recallBase]]'s session cache, and the banded LSH
+    * and IVF indexes from [[MaterializedLshBands]] / [[MaterializedIvfCells]],
+    * so every pipeline — exact ground truth and all three ANN methods —
+    * reads materialized frames. The only remaining executions are the four
+    * measurements themselves, each exactly once.
     */
   private def s05(s: SparkSession, dir: String): DataFrame = {
     val p = planesFor(Tables.rowCount(s, dir, "embeddings"))
     val (vecs, ids, exact, base) = recallBase(s, dir)
     def stats(ann: DataFrame, name: String): DataFrame =
       recallStats(exact, base, ann, name)
-    // one banded index build feeds BOTH probe variants (see lshBands);
-    // under lshBandsCache it is the same session-materialized table
-    // s02/s06/d11 read (round 19) — no per-run checkpoint at all
-    val bands =
-      if (graft.config.Scale.lshBandsCache) MaterializedLshBands.bands(s, dir)
-      else lshBands(vecs, p).localCheckpoint()
+    // one banded index feeds BOTH probe variants: the session-materialized
+    // table s02/s06/d11 read — no per-run checkpoint at all
+    val bands = MaterializedLshBands.bands(s, dir)
     val lsh = topkRank(lshPairsFromBands(bands, ids, p, multiProbe = false), 3)
     val lshMp = topkRank(lshPairsFromBands(bands, ids, p, multiProbe = true), 3)
-    // the IVF arm shares the session-materialized index under the same knob
-    // s04 runs with (round 19): the self-built arm re-ran the codebook
-    // aggregate and the O(n·IvfK) assignment fold inside every s05
-    // execution — the one index build is the deployment contract, and
-    // ScaleConfSpec pins cached ≡ uncached. Cache off: self-contained as
-    // before.
-    val ivf =
-      if (graft.config.Scale.ivfCache) {
-        val cents = MaterializedIvfCells.codebook(s, dir)
-        s04From(vecs, ids, MaterializedIvfCells.assigned(s, dir, cents), cents)
-      } else s04From(vecs, ids)
+    // the IVF arm shares s04's session-materialized index (round 19): a
+    // self-built arm re-ran the codebook aggregate and the O(n·IvfK)
+    // assignment fold inside every s05 execution
+    val ivf = s04From(vecs, ids, MaterializedIvfCells.assigned(s, dir),
+      MaterializedIvfCells.codebook(s, dir))
     stats(lsh, "lsh")
       .unionAll(stats(lshMp, "lsh_mp"))
       .unionAll(stats(ivf, "ivf"))
@@ -1045,7 +1006,7 @@ object SimilarityQueries extends QueryPack {
     * 8 of 64 dims is an 8× index shrink; this table says what it costs.
     *
     * Scale shape: s05's harness — the quantized base and query sample are
-    * localCheckpoint'ed once, each truncated pipeline is a fixed-k
+    * session-cached ([[recallBase]]), each truncated pipeline is a fixed-k
     * broadcast-sample map-side O(k·n) scoring pass (slice + re-norm is a
     * projection; no extra scan, no shuffle beyond topkRank's bounded agg),
     * and recall joins are left-semi on (query_id, neighbor_id).
@@ -1645,7 +1606,7 @@ object SimilarityQueries extends QueryPack {
     val q = baseVecs(s, dir).localCheckpoint()
     val ids = sampleIds(s, dir, QueryK)
     val cents = MaterializedIvfCells.codebook(s, dir)
-    val withCell = MaterializedIvfCells.assigned(s, dir, cents)
+    val withCell = MaterializedIvfCells.assigned(s, dir)
       .select(col("vec_id").as("neighbor_id"), col("cell"))
     val probeRank = q.join(broadcast(ids), "vec_id")
       .crossJoin(broadcast(cents))

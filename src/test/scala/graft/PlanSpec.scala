@@ -40,6 +40,18 @@ class PlanSpec extends SparkSpecBase {
     df
   }
 
+  /** Final plan of the IVF index's direct build. s04/s21 plans start at the
+    * session-cached assignment, so its join shape is asserted here.
+    */
+  private def ivfAssignPlan(): String = {
+    import graft.queries.MaterializedIvfCells
+    val dir = sf("sf0.001")
+    val df = MaterializedIvfCells.buildAssigned(spark, dir,
+      MaterializedIvfCells.buildCodebook(spark, dir))
+    df.collect()
+    planString(df)
+  }
+
   test("q03: filter and projection push into the parquet scan") {
     val s = planString(run("q03_filter_project"))
     assert(s.contains("PushedFilters: ["), "filters must reach the scan")
@@ -361,6 +373,14 @@ class PlanSpec extends SparkSpecBase {
     assert(!s.contains("SortMergeJoin"),
       "no shuffle join anywhere in IVF assignment or probing")
     assert(!s.contains("CartesianProduct"))
+    // s04 reads the cached assignment, so the assignment join is checked
+    // on the index build's own plan
+    val build = ivfAssignPlan()
+    assert(build.contains("BroadcastNestedLoopJoin"),
+      "the collapsed codebook must join as a broadcast 1-row frame")
+    assert(!build.contains("SortMergeJoin"),
+      "no shuffle join anywhere in IVF assignment")
+    assert(!build.contains("CartesianProduct"))
   }
 
   test("s08 PQ code assignment is per-row: codegen encode, one tiny agg") {
@@ -917,6 +937,12 @@ class PlanSpec extends SparkSpecBase {
       "codebook and query sample must broadcast")
     assert(!s.contains("SortMergeJoin"),
       "no corpus-sized shuffle join anywhere in the sweep")
+    // the codebook assignment runs inside the cached index build
+    val build = ivfAssignPlan()
+    assert(build.contains("BroadcastNestedLoopJoin"),
+      "codebook assignment must broadcast the 1-row codebook frame")
+    assert(!build.contains("CartesianProduct") && !build.contains("SortMergeJoin"),
+      "no corpus shuffle join in the codebook assignment")
   }
 
   test("round-9 batch 6 keeps scale shapes (r24/t36/m16)") {
@@ -980,6 +1006,17 @@ class PlanSpec extends SparkSpecBase {
       !d31.contains("BroadcastNestedLoopJoin"))
     assert(d31.contains("hashpartitioning(i"),
       "run windows must distribute by the pair key")
+    // d31 reads the cached island table, so the candidate self-join and the
+    // run windows are checked on its direct build's plan
+    val islands = graft.queries.MaterializedAlignedRuns.build(spark, sf("sf0.001"))
+    islands.collect()
+    val build = planString(islands)
+    assert(build.contains("Window"), "run detection runs as window functions")
+    assert(build.contains("hashpartitioning(i"),
+      "run windows must distribute by the pair key")
+    assert(!build.contains("CartesianProduct") &&
+      !build.contains("BroadcastNestedLoopJoin"),
+      "the posting join must stay a hash equi-join")
   }
 
   test("s22 hybrid RRF: fixed-k arms, keyed joins, no cartesian") {

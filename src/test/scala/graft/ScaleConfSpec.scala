@@ -1,12 +1,19 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.config.Scale
+import graft.queries._
 
 /** The graft.scale.* conf layer: every scale knob defaults to the value the
   * committed oracles are pinned to, and an override re-scales the DataFrame
   * plan AND the generated DuckDB oracle SQL together — a production profile
   * is a session setting, never a code edit, and can never desync the two
   * sides of a verify run.
+  *
+  * The seven "…Cache changes cost attribution" tests keep the names of the
+  * switches that once gated each session-cached table; the cache is now
+  * always on, and each pins its tables equal to their direct builds.
   */
 class ScaleConfSpec extends SparkSpecBase {
 
@@ -19,6 +26,20 @@ class ScaleConfSpec extends SparkSpecBase {
     }
   }
 
+  private val dir = sf("sf0.001")
+
+  /** A session-cached table equals its direct build: `exceptAll` is empty
+    * both ways (a multiset comparison in which arrays compare element by
+    * element, so element order must survive the parquet round-trip).
+    */
+  private def assertReadThrough(tag: String, cached: DataFrame,
+                                built: DataFrame): Unit = {
+    assert(cached.columns.toSeq == built.columns.toSeq, s"$tag columns")
+    assert(built.count() > 0, s"$tag is empty at sf0.001: the parity shows nothing")
+    assert(cached.exceptAll(built).isEmpty, s"$tag: cached rows missing from the build")
+    assert(built.exceptAll(cached).isEmpty, s"$tag: built rows missing from the cache")
+  }
+
   test("defaults are the committed-oracle values") {
     spark // the knobs read the active session's conf; defaults need none set
     assert(Scale.queryK == 50)
@@ -29,180 +50,65 @@ class ScaleConfSpec extends SparkSpecBase {
     assert(Scale.kmIters == 2)
     assert(Scale.cellQuota == 10)
     assert(Scale.maxDf == 1000)
-    assert(!Scale.graphEdgeCache)
-    assert(!Scale.shingleCache)
-    assert(!Scale.kmeansCache)
-    assert(!Scale.alignCache)
-    assert(!Scale.ivfCache)
-    assert(!Scale.lshBandsCache)
   }
 
   test("lshBandsCache changes cost attribution, never results") {
-    // s02/s06/s05/d11 share one materialized banded sign-LSH index when
-    // the knob is on; the committed oracles run with it OFF — this parity
-    // pins that the quantized-long vectors, IEEE-double norms and the
-    // (band, value) bucket keys reproduce all four consumers' results
-    // bit-identically through the parquet round-trip (s05's recall doubles
-    // and d11's component census included)
-    def run(name: String) = SparkEntry.queries(name)(spark, sf("sf0.001"))
-      .collect().map(_.toSeq).toSeq
-    val names = Seq("s02_ann_lsh", "s06_ann_lsh_mp", "s05_ann_recall",
-      "d11_semantic_dedup")
-    names.foreach(n => assert(SparkEntry.queries.contains(n),
-      s"LSH pack name $n moved — update this spec"))
-    val off = names.map(n => n -> run(n)).toMap
-    val on = withScale("lshBandsCache" -> "1") {
-      names.map(n => n -> run(n)).toMap
-    }
-    names.foreach { n =>
-      assert(on(n) == off(n), s"$n cached != uncached")
-    }
+    // s02/s06/s05/d11 share one materialized banded sign-LSH index: the
+    // quantized-long vectors, IEEE-double norms and (band, value) bucket
+    // keys must survive the parquet round-trip exactly
+    assertReadThrough("lshbands",
+      MaterializedLshBands.bands(spark, dir), MaterializedLshBands.build(spark, dir))
   }
 
   test("graphEdgeCache changes cost attribution, never results") {
-    // the bench sweep runs the graph AND dedup packs against one
-    // materialized pair table per session; the committed oracles run with
-    // the knob OFF — this parity pins that the two paths are bit-identical
-    // on both a graph consumer and the dedup consumers that read the full
-    // (i, j, jac) schema (d03 exposes the jac doubles directly, so it also
-    // pins that they round-trip the parquet cache exactly)
-    def run(name: String) = SparkEntry.queries(name)(spark, sf("sf0.001"))
-      .collect().map(_.toSeq).toSeq
-    val names = Seq("g02_triangles", "g05_assortativity",
-      "d03_minhash_lsh", "d18_soft_dedup_weights")
-    names.foreach(n => assert(SparkEntry.queries.contains(n),
-      s"graph pack name $n moved — update this spec"))
-    val off = names.map(n => n -> run(n)).toMap
-    val on = withScale("graphEdgeCache" -> "1") {
-      names.map(n => n -> run(n)).toMap
-    }
-    names.foreach { n =>
-      assert(on(n) == off(n), s"$n cached != uncached")
-    }
+    // the graph pack and the dedup pair consumers share one materialized
+    // (i, j, jac) table; the jac doubles must round-trip exactly
+    assertReadThrough("pairs",
+      MaterializedPairs.nearDup(spark, dir), MaterializedPairs.build(spark, dir))
   }
 
   test("shingleCache changes cost attribution, never results") {
     // seven dedup pipelines (and the pair-table build) start from the one
-    // session-materialized (doc_id, lang, source, s3) table when the knob
-    // is on; the committed oracles run with it OFF — this parity pins that
-    // the parquet round-trip is bit-identical on consumers covering the
-    // jac doubles (d02), the multi-width band sweep (d23), the
-    // prefix-filter arrays (d27, array_intersect is element-ORDER
-    // sensitive in cost, order must survive the round-trip), and the
-    // source-keyed signature rollup (d29)
-    def run(name: String) = SparkEntry.queries(name)(spark, sf("sf0.001"))
-      .collect().map(_.toSeq).toSeq
-    val names = Seq("d02_ngram_jaccard", "d23_band_sweep", "d25_containment",
-      "d27_prefix_filter_join", "d29_source_overlap")
-    names.foreach(n => assert(SparkEntry.queries.contains(n),
-      s"dedup pack name $n moved — update this spec"))
-    val off = names.map(n => n -> run(n)).toMap
-    val on = withScale("shingleCache" -> "1") {
-      names.map(n => n -> run(n)).toMap
-    }
-    names.foreach { n =>
-      assert(on(n) == off(n), s"$n cached != uncached")
-    }
-    // and composed with the pair-table cache (the full bench profile):
-    // a MaterializedPairs consumer built FROM the cached shingle table
-    val both = withScale("shingleCache" -> "1", "graphEdgeCache" -> "1") {
-      run("d03_minhash_lsh")
-    }
-    assert(both == run("d03_minhash_lsh"), "d03 under both knobs != plain")
+    // (doc_id, lang, source, s3) table, and d02/d23/d25 from one overlap
+    // pair table; the s3 arrays must keep their element order (d27's
+    // prefix filter reads it)
+    assertReadThrough("sh3",
+      MaterializedShingles.s3(spark, dir), MaterializedShingles.build(spark, dir))
+    val maxDf = Scale.maxDf
+    assertReadThrough("ovp", DedupQueries.overlapPairs(spark, dir, maxDf),
+      DedupQueries.overlapPairsFrom(MaterializedShingles.build(spark, dir), maxDf))
   }
 
   test("groundTruthCache changes cost attribution, never results") {
-    // s05/s14/s16 share one materialized exact-ground-truth scoring pass
-    // when the knob is on; the committed oracles run with it OFF — this
-    // parity pins that the quantized-long vectors, the md5-ordered query
-    // sample, and the recall doubles all round-trip the parquet cache
-    // bit-identically across all three consumers
-    def run(name: String) = SparkEntry.queries(name)(spark, sf("sf0.001"))
-      .collect().map(_.toSeq).toSeq
-    val names = Seq("s05_ann_recall", "s14_mrl_recall", "s16_jl_recall")
-    names.foreach(n => assert(SparkEntry.queries.contains(n),
-      s"similarity pack name $n moved — update this spec"))
-    val off = names.map(n => n -> run(n)).toMap
-    val on = withScale("groundTruthCache" -> "1") {
-      names.map(n => n -> run(n)).toMap
-    }
-    names.foreach { n =>
-      assert(on(n) == off(n), s"$n cached != uncached")
-    }
-    // and the FULL bench profile — all three session caches on at once
-    // (the exact conf the sweep runs under): one recall consumer and one
-    // pair-table consumer must still match their committed-oracle runs
-    val full = withScale("groundTruthCache" -> "1", "shingleCache" -> "1",
-      "graphEdgeCache" -> "1") {
-      Seq("s14_mrl_recall", "d03_minhash_lsh").map(n => n -> run(n)).toMap
-    }
-    assert(full("s14_mrl_recall") == run("s14_mrl_recall"),
-      "s14 under the full bench profile != plain")
-    assert(full("d03_minhash_lsh") == run("d03_minhash_lsh"),
-      "d03 under the full bench profile != plain")
+    // s05/s14/s16 share the quantized vectors, the md5-ordered query
+    // sample, the exact top-3 truth and its 1-row totals
+    val cached = SimilarityQueries.recallBase(spark, dir)
+    val built = SimilarityQueries.recallBuild(spark, dir)
+    Seq("rbvecs" -> (cached._1, built._1), "rbids" -> (cached._2, built._2),
+      "rbexact" -> (cached._3, built._3), "rbbase" -> (cached._4, built._4))
+      .foreach { case (tag, (c, b)) => assertReadThrough(tag, c, b) }
   }
 
   test("kmeansCache changes cost attribution, never results") {
-    // s10/s11/d15 share one materialized Lloyd fit when the knob is on;
-    // the committed oracles run with it OFF — this parity pins that the
-    // assignment (vec_id, quantized-long vectors, c_id, exact-int d2)
-    // round-trips the parquet cache bit-identically across the cell
-    // census (d2 sums + mean doubles), the balanced sample (md5-ranked
-    // per-cell quota), and the SemDeDup eviction (within-cell cosine)
-    def run(name: String) = SparkEntry.queries(name)(spark, sf("sf0.001"))
-      .collect().map(_.toSeq).toSeq
-    val names = Seq("s10_kmeans", "s11_cluster_sample", "d15_semdedup")
-    names.foreach(n => assert(SparkEntry.queries.contains(n),
-      s"k-means pack name $n moved — update this spec"))
-    val off = names.map(n => n -> run(n)).toMap
-    val on = withScale("kmeansCache" -> "1") {
-      names.map(n => n -> run(n)).toMap
-    }
-    names.foreach { n =>
-      assert(on(n) == off(n), s"$n cached != uncached")
-    }
+    // s10/s11/d15 share one Lloyd fit: vec_id, quantized-long vectors,
+    // c_id and the exact-int d2
+    assertReadThrough("kmcells",
+      MaterializedKMeans.cells(spark, dir), MaterializedKMeans.build(spark, dir))
   }
 
   test("alignCache changes cost attribution, never results") {
-    // d31/d33 share one materialized island table when the knob is on;
-    // the committed oracles run with it OFF — this parity pins that the
-    // (i, j, diag, rl, pa0, pa1) longs round-trip the parquet cache
-    // bit-identically through both the per-pair max (d31) and the
-    // span/interval-union stage (d33, incl. its evict_frac doubles)
-    def run(name: String) = SparkEntry.queries(name)(spark, sf("sf0.001"))
-      .collect().map(_.toSeq).toSeq
-    val names = Seq("d31_aligned_run", "d33_substring_evict")
-    names.foreach(n => assert(SparkEntry.queries.contains(n),
-      s"aligned-run pack name $n moved — update this spec"))
-    val off = names.map(n => n -> run(n)).toMap
-    val on = withScale("alignCache" -> "1") {
-      names.map(n => n -> run(n)).toMap
-    }
-    names.foreach { n =>
-      assert(on(n) == off(n), s"$n cached != uncached")
-    }
+    // d31/d33 share one (i, j, diag, rl, pa0, pa1) island table
+    assertReadThrough("alignruns", MaterializedAlignedRuns.islands(spark, dir),
+      MaterializedAlignedRuns.build(spark, dir))
   }
 
   test("ivfCache changes cost attribution, never results") {
-    // s04/s21 share one materialized IVF index when the knob is on; the
-    // committed oracles run with it OFF — this parity pins that the
-    // quantized-long vectors, IEEE-double norms, the parquet-cached cell
-    // assignment, and the re-aggregated one-row codebook all reproduce
-    // both the search results and the recall-sweep doubles bit-identically
-    def run(name: String) = SparkEntry.queries(name)(spark, sf("sf0.001"))
-      .collect().map(_.toSeq).toSeq
-    // s05's IVF arm reads the same index; the bench runs it with the
-    // banded-LSH cache on as well, so its cached side turns on both
-    val knobs = Map(
-      "s04_ann_ivf" -> Seq("ivfCache" -> "1"),
-      "s21_nprobe_sweep" -> Seq("ivfCache" -> "1"),
-      "s05_ann_recall" -> Seq("ivfCache" -> "1", "lshBandsCache" -> "1"))
-    knobs.keys.foreach(n => assert(SparkEntry.queries.contains(n),
-      s"IVF pack name $n moved — update this spec"))
-    knobs.foreach { case (n, kv) =>
-      val off = run(n)
-      assert(withScale(kv: _*)(run(n)) == off, s"$n cached != uncached")
-    }
+    // s04/s05/s21 share the one-row codebook (re-aggregated from its
+    // cached exploded rows, c_id-sorted) and the corpus cell assignment
+    val cents = MaterializedIvfCells.buildCodebook(spark, dir)
+    assertReadThrough("ivfcents", MaterializedIvfCells.codebook(spark, dir), cents)
+    assertReadThrough("ivfcells", MaterializedIvfCells.assigned(spark, dir),
+      MaterializedIvfCells.buildAssigned(spark, dir, cents))
   }
 
   test("queryK override re-scales DataFrame result and oracle SQL together") {
