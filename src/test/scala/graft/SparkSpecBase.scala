@@ -20,6 +20,7 @@ object SparkSpecBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFileSystemConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
